@@ -69,7 +69,7 @@ from .datapipe import (
     _sq8_xhat,
     auto_cells,
 )
-from .util import prune_partitions, run_concurrent, tiny_df
+from .util import prune_partitions, read_parquet, run_concurrent, tiny_df
 
 
 class AnnIndex:
@@ -117,6 +117,20 @@ class AnnIndex:
             self.units, nprobe=nprobe,
             out_schema=f"qid {qdt[id_col]}, qvec {qdt[vec_col]}, __cell long",
         ).persist()
+        # until _retain hands q to the result stream, a failure here
+        # would leave it pinned in the cache manager for the session
+        try:
+            result = self._rank_probed(queries, q, k=k, rerank=rerank)
+        except BaseException:
+            q.unpersist()
+            raise
+        return result._retain(q)
+
+    def _rank_probed(self, queries, q, *, k: int, rerank: int):
+        """The index lookup of :meth:`query` for the persisted probe
+        batch ``q`` (qid, qvec, __cell): pruned codes scan, tombstone
+        anti-join, SQ8 candidates, exact rerank."""
+        id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
         # The probed-cell set IS the index lookup: a bounded driver
         # collect (≤ PROBE_LITERAL_MAX + 1 ints) decides between a
         # LITERAL partition filter (small probes — the listing itself
@@ -174,7 +188,7 @@ class AnnIndex:
             enc.select(F.col(id_col), F.col("cvec").alias(vec_col))
         )
         return _exact_rerank_topk(corpus, cand, vec_col=vec_col,
-                                  id_col=id_col, k=k)._retain(q)
+                                  id_col=id_col, k=k)
 
     # -------------------------------------------------------------- #
     def append(self, stream) -> None:
@@ -667,7 +681,7 @@ def ann_index_load(spark, path: str) -> AnnIndex:
     """Open a persisted index: reads the 1-row meta and the n_cells
     centroid rows (bounded driver collects); the codes stay on disk
     until a query probes them."""
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = read_parquet(spark, f"{path}/meta").collect()[0]
     meta = {
         "id_col": m["id_col"],
         "vec_col": m["vec_col"],

@@ -13,6 +13,7 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from .stream import Stream
+from .util import read_parquet
 
 _DEFAULT_CONF = {
     # Catalyst/AQE do the physical planning renoir leaves to the user
@@ -159,8 +160,16 @@ class StreamContext:
     def stream_parquet(self, path: str, *paths: str) -> Stream:
         """Parquet scan — renoir ``ParquetSource``
         (src/operator/source/parquet.rs:21-93) is single-replica Arrow
-        batches; Spark's scan is distributed with pushdown/pruning."""
-        return Stream(self, self.spark.read.parquet(path, *paths))
+        batches; Spark's scan is distributed with pushdown/pruning.
+
+        The schema is inferred once per file set per process
+        (:func:`util.read_parquet`): a repeat read of unchanged files
+        skips Spark's footer-inference job. It is inferred again when
+        any file under the paths changes (name, size or mtime) or when
+        a conf that changes parquet type mapping or partition inference
+        does (``nanosAsLong``, ``binaryAsString``, ``caseSensitive``,
+        ...). Paths with a non-``file:`` scheme are never cached."""
+        return Stream(self, read_parquet(self.spark, path, *paths))
 
     def compact_parquet(self, src_path: str, dst_path: str, *,
                         target_file_mb: int = 256, **options) -> int:
@@ -186,7 +195,7 @@ class StreamContext:
         total = sum(_os.path.getsize(f) for f in files)
         n_out = max(1, -(-total // (target_file_mb * 1024 * 1024)))
         (
-            self.spark.read.parquet(src_path)
+            read_parquet(self.spark, src_path)
             .repartition(n_out)
             .write.mode("overwrite").options(**options).parquet(dst_path)
         )

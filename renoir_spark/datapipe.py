@@ -22,6 +22,7 @@ Scale design notes are on each operator; the common rules:
 from __future__ import annotations
 
 import math
+import re
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -191,18 +192,33 @@ _EXCHANGE_NODE_MARKERS = (
 )
 
 
+# One node per line of a plan's tree string: the tree-drawing prefix,
+# an optional whole-stage-codegen tag, then the node name.
+_PLAN_NODE_NAME = re.compile(r"^[\s:+|-]*(?:\*\(\d+\)\s+)?(\w+)")
+
+
 def _plan_is_scan_shaped(df) -> bool:
     """True when the optimized logical plan contains no node that plans
     to a shuffle/blocking physical operator — i.e. ``df.rdd`` metadata
-    probes cannot trigger any upstream stage execution. String scan of
-    the plan tree (computed once per Dataset and cached by
-    QueryExecution, so the later action pays nothing extra); errs
-    toward False (skip the probe) on any doubt or API drift."""
+    probes cannot trigger any upstream stage execution. Reads the node
+    name off each line of the plan tree, inner plans included
+    (subqueries, the physical plan under a cached relation), and
+    matches the markers against those names only: a column called
+    ``JoinDate`` or ``SortKey`` is not a join or a sort. The tree is one
+    JVM call; the optimized plan is computed once per Dataset and
+    cached by QueryExecution, so the later action pays nothing extra.
+    Errs toward False (skip the probe) on any doubt or API drift; an
+    argument printed over several lines can only add names, so it errs
+    the same way."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        tree = df._jdf.queryExecution().optimizedPlan().treeString()
     except Exception:  # pragma: no cover - Connect / API drift
         return False
-    return not any(m in plan for m in _EXCHANGE_NODE_MARKERS)
+    for line in tree.splitlines():
+        m = _PLAN_NODE_NAME.match(line)
+        if m and any(k in m.group(1) for k in _EXCHANGE_NODE_MARKERS):
+            return False
+    return True
 
 
 def _spread_for_compute(df, *, min_factor: int = 1):

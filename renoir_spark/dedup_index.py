@@ -66,6 +66,7 @@ from .datapipe import (
 from .util import (
     free_local_checkpoint,
     prune_partitions,
+    read_parquet,
     run_concurrent,
     tiny_df,
 )
@@ -797,7 +798,7 @@ def phash_index_build(stream, path: str, *,
 
 
 def phash_index_load(spark, path: str) -> PhashIndex:
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = read_parquet(spark, f"{path}/meta").collect()[0]
     meta = {
         "id_col": m["id_col"],
         "features_col": m["features_col"],
@@ -969,7 +970,7 @@ def _write_tombstones(spark, path: str, ids_df, id_col: str,
 def dedup_index_load(spark, path: str):
     """Open a persisted dedup index (either mode): one 1-row meta read;
     the data relations stay on disk until a batch probes them."""
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = read_parquet(spark, f"{path}/meta").collect()[0]
     row = m.asDict()
     meta = {
         "id_col": m["id_col"],

@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -142,9 +148,10 @@ def run_concurrent(*thunks) -> None:
     pure commit latency (file create + rename), so running them
     sequentially stacks that latency while the cluster idles — at ANY
     scale, since the cost is per-write, not per-byte. Callers must
-    ensure the thunks share no path and no ordering dependency. The
-    first raised exception propagates after every thunk has settled
-    (no half-submitted pool teardown)."""
+    ensure the thunks share no path and no ordering dependency.
+    Failures propagate after every thunk has settled (no half-submitted
+    pool teardown): a single failure is re-raised unchanged, two or more
+    as one ``ExceptionGroup`` holding every cause."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -158,8 +165,120 @@ def run_concurrent(*thunks) -> None:
                 f.result()
             except BaseException as e:  # noqa: BLE001 - resurfaced below
                 errs.append(e)
-        if errs:
+        if len(errs) == 1:
             raise errs[0]
+        if errs:
+            raise BaseExceptionGroup(
+                f"{len(errs)} of {len(thunks)} concurrent actions failed", errs
+            )
+
+
+# -------------------------------------------------------------------- #
+# Parquet reads with a per-file-set schema cache
+# -------------------------------------------------------------------- #
+
+# Session confs that change what a parquet read infers: footer type
+# mapping, schema merging, column-name case, partition-value typing.
+_PARQUET_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_SCHEMA_CACHE_MAX = 256
+_schema_cache: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _local_fingerprint(path: str):
+    """``(abspath, ((relpath, size, mtime_ns), ...))`` for every file
+    under a bare or ``file:`` path, from one walk/stat pass. ``None``
+    (uncacheable) for any other scheme, a glob, or a path that does not
+    exist or changes while it is walked."""
+    parts = urlsplit(path)
+    if parts.scheme == "file" and not parts.netloc:
+        local = parts.path
+    elif parts.scheme:
+        return None
+    else:
+        local = path
+    if any(c in local for c in "*?[{"):
+        return None
+    local = os.path.abspath(local)
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return local, (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(local):
+            for n in names:
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append(
+                    (os.path.relpath(f, local), fst.st_size, fst.st_mtime_ns)
+                )
+    except OSError:
+        return None
+    return local, tuple(sorted(files))
+
+
+def _parquet_schema_key(spark, paths):
+    """Cache key of a schema-less parquet read: the inference confs plus
+    every file under every path. ``None`` when any path is not local
+    (bare paths count as local only under a ``file:`` default FS)."""
+    if any(not urlsplit(p).scheme for p in paths):
+        try:
+            default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+                "fs.defaultFS"
+            )
+        except Exception:  # Connect session / API drift: no local view
+            return None
+        if not str(default_fs).startswith("file:"):
+            return None
+    files = []
+    for p in paths:
+        fp = _local_fingerprint(p)
+        if fp is None:
+            return None
+        files.append(fp)
+    confs = tuple(spark.conf.get(k, None) for k in _PARQUET_INFER_CONFS)
+    return confs, tuple(files)
+
+
+def read_parquet(spark, *paths):
+    """``spark.read.parquet(*paths)`` that infers the schema once per
+    file set per process. Inference is a one-task Spark job reading the
+    footers; renoir pays nothing here (a source's schema is its element
+    type). On a hit the read passes the kept schema, so Spark still
+    lists the files and plans the same scan — only the footer job goes.
+
+    The key is every file under each path (name, size, ``mtime_ns``)
+    plus the session confs in ``_PARQUET_INFER_CONFS``: a path rewritten
+    in place, or a flipped type-mapping conf, is inferred again. Paths
+    with a non-``file:`` scheme are never cached. A failed inference
+    stores nothing, so an empty directory raises as before. The cache
+    is a process-wide LRU of ``_SCHEMA_CACHE_MAX`` schemas, guarded by
+    a lock (``run_concurrent`` threads read in parallel)."""
+    key = _parquet_schema_key(spark, paths)
+    if key is not None:
+        with _schema_lock:
+            schema = _schema_cache.get(key)
+            if schema is not None:
+                _schema_cache.move_to_end(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if key is not None:
+        with _schema_lock:
+            _schema_cache[key] = df.schema
+            _schema_cache.move_to_end(key)
+            while len(_schema_cache) > _SCHEMA_CACHE_MAX:
+                _schema_cache.popitem(last=False)
+    return df
 
 
 # -------------------------------------------------------------------- #

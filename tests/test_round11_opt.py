@@ -32,6 +32,27 @@ def test_plan_shape_guard_classifies_plans(ctx):
     assert not _plan_is_scan_shaped(base.orderBy("id"))
 
 
+def test_plan_shape_guard_ignores_marker_named_columns(ctx):
+    from renoir_spark.datapipe import _plan_is_scan_shaped
+
+    # markers are matched against plan NODE names, not the plan text: a
+    # column called JoinDate/SortKey/WindowEnd is still a plain scan
+    base = ctx.spark.range(0, 100, 1, 1)
+    renamed = base.select(
+        F.col("id").alias("JoinDate"), (F.col("id") * 2).alias("SortKey"),
+        F.col("id").alias("WindowEnd"),
+    )
+    assert _plan_is_scan_shaped(renamed)
+    assert _plan_is_scan_shaped(renamed.filter("SortKey > 3"))
+    assert not _plan_is_scan_shaped(renamed.groupBy("JoinDate").count())
+    # a cached aggregate still hides an exchange under its relation
+    cached = renamed.groupBy("SortKey").count().persist()
+    try:
+        assert not _plan_is_scan_shaped(cached)
+    finally:
+        cached.unpersist()
+
+
 def test_spread_skips_exchange_shaped_inputs_unchanged(ctx):
     from renoir_spark.datapipe import _spread_for_compute
 
@@ -139,3 +160,66 @@ def test_ann_build_write_failure_releases_cache(ctx, tmp_path, monkeypatch):
         ai.ann_index_build(emb, str(tmp_path / "annidx"), dim=8,
                            n_cells=4)
     assert jsc.getPersistentRDDs().size() == before  # no leaked persist
+
+
+def test_ann_query_failure_releases_probe_cache(ctx, tmp_path, monkeypatch):
+    # AnnIndex.query persists its probed batch before the index lookup;
+    # a failure before the result stream retains it must unpersist it
+    import renoir_spark.ann_index as ai
+
+    emb = ctx.from_df(
+        ctx.spark.createDataFrame(
+            [(i, [float(i % 7), float(i % 5)]) for i in range(32)],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    path = str(tmp_path / "annidx")
+    ai.ann_index_build(emb, path, dim=2, n_cells=4)
+    idx = ai.ann_index_load(ctx.spark, path)
+
+    probed = []
+    real_probe = ai._ivf_probe
+
+    def spy_probe(*a, **k):
+        probed.append(real_probe(*a, **k))
+        return probed[-1]
+
+    def boom(*a, **k):
+        raise IOError("listing failed (simulated)")
+
+    monkeypatch.setattr(ai, "_ivf_probe", spy_probe)
+    monkeypatch.setattr(ai, "prune_partitions", boom)
+    with pytest.raises(IOError):
+        idx.query(emb.filter("vec_id < 4"), k=2)
+    (q,) = probed
+    cache = ctx.spark._jsparkSession.sharedState().cacheManager()
+    assert not q.is_cached
+    assert cache.lookupCachedData(q._jdf).isEmpty()
+
+
+# ------------------------------------------------------------------ #
+# run_concurrent: every failure survives, a single one is unchanged
+# ------------------------------------------------------------------ #
+
+def test_run_concurrent_keeps_every_failure():
+    from renoir_spark.util import run_concurrent
+
+    ran = []
+
+    def ok():
+        ran.append("ok")
+
+    def fail_a():
+        raise IOError("meta write failed")
+
+    def fail_b():
+        raise ValueError("grid write failed")
+
+    with pytest.raises(ExceptionGroup) as info:
+        run_concurrent(fail_a, ok, fail_b)
+    assert ran == ["ok"]
+    assert sorted(type(e).__name__ for e in info.value.exceptions) == [
+        "OSError", "ValueError"]
+    # one failure propagates as itself, not wrapped
+    with pytest.raises(ValueError, match="grid write failed"):
+        run_concurrent(ok, fail_b)
