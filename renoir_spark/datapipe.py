@@ -442,24 +442,6 @@ def dedup_against_bloom(
 # MinHash-LSH near-duplicate dedup
 # --------------------------------------------------------------------- #
 
-def minhash_signature(col, num_hashes: int = 12, shingle_n: int = 3) -> Column:
-    """Array of ``num_hashes`` minhash values over word shingles — pure
-    Column expressions (md5 → 31-bit int → a*h+b mod P → array_min).
-
-    Convenience single-expression form for small inputs/tests; hot
-    paths must use :func:`minhash_bands_expr`, which stages every
-    intermediate as a real column (the word_shingles / shingles_from
-    re-tokenization trap — measured 50× on the shingle chain, and again
-    8× on corpus_overlap in round 7)."""
-    hs = F.transform(word_shingles(col, shingle_n), lambda s: md5_int31(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)))
-            for a, b in _mh_params(num_hashes)
-        ]
-    )
-
-
 def minhash_bands_expr(
     df,
     text_col: str,
@@ -1312,22 +1294,8 @@ def dedup_simhash(
     )
     sig = staged.select("__id", simhash.alias("__sim")).persist()
 
-    mask = (1 << band_width) - 1
     bands_df = sig.select(
-        "__id", "__sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bidx"),
-                        F.shiftright(F.col("__sim"), b * band_width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bval"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__b"),
+        "__id", "__sim", band_split_expr(F.col("__sim"), bands, band_width),
     ).select("__id", "__sim", F.col("__b.bidx").alias("bidx"), F.col("__b.bval").alias("bval"))
 
     if bucket_cap is not None:
@@ -1424,6 +1392,28 @@ def phash_expr(feats: Column, bits: int) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
+
+
+def band_split_expr(sig: Column, bands: int, band_width: int) -> Column:
+    """Explode a packed integer signature into its ``bands`` LSH band
+    rows: one struct ``__b = (bidx, bval)`` per band, where ``bval`` is
+    bits ``[bidx·band_width, (bidx+1)·band_width)`` of ``sig``. The one
+    band split of the bit-signature family (simhash, phash — batch,
+    streaming, video and the persisted phash index)."""
+    mask = (1 << band_width) - 1
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("bidx"),
+                    F.shiftright(sig, b * band_width)
+                    .bitwiseAND(F.lit(mask))
+                    .alias("bval"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("__b")
 
 
 def dedup_phash(
@@ -1534,22 +1524,8 @@ def dedup_phash(
         phash_expr(F.col("__feat"), bits).alias("__ph"),
     ).persist()
 
-    mask = (1 << band_width) - 1
     bands_df = sig.select(
-        "__id", "__ph",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bidx"),
-                        F.shiftright(F.col("__ph"), b * band_width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bval"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__b"),
+        "__id", "__ph", band_split_expr(F.col("__ph"), bands, band_width),
     ).select("__id", "__ph", F.col("__b.bidx").alias("bidx"),
              F.col("__b.bval").alias("bval"))
 
@@ -3249,18 +3225,6 @@ def heavy_hitters(stream, key_col, k: int, *, capacity: Optional[int] = None,
     spark = stream.df.sparkSession
     out = spark.createDataFrame(rows, topk.schema)
     return stream._new(out.withColumnRenamed("__key", key_col))
-
-
-def sql_heavy_hitters(table_expr: str, key: str, k: int, *,
-                      cnt_alias: str = "cnt") -> str:
-    return f"""
-SELECT {key}, count(*) AS {cnt_alias}
-FROM {table_expr}
-WHERE {key} IS NOT NULL
-GROUP BY {key}
-ORDER BY {cnt_alias} DESC, {key} ASC
-LIMIT {k}
-"""
 
 
 # --------------------------------------------------------------------- #

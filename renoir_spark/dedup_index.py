@@ -58,6 +58,7 @@ from .datapipe import (
     _mh_params,
     _sql_minhash_ctes,
     _SQL_JACCARD,
+    band_split_expr,
     md5_int31,
     minhash_bands_expr,
     sql_md5_int31,
@@ -603,23 +604,9 @@ class PhashIndex:
 
     def _band_rows(self, sig):
         bands, bits = self.meta["bands"], self.meta["bits"]
-        bw = bits // bands
-        mask = (1 << bw) - 1
         nd = self.meta["bucket_dirs"]
         rows = sig.select(
-            "__id", "__ph",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bidx"),
-                            F.shiftright(F.col("__ph"), b * bw)
-                            .bitwiseAND(F.lit(mask)).alias("bval"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("__b"),
+            "__id", "__ph", band_split_expr(F.col("__ph"), bands, bits // bands)
         )
         return rows.select(
             F.col("__b.bidx").alias("bidx"),

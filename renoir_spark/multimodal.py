@@ -617,11 +617,10 @@ def dedup_video_phash(
     survives any ``num_frames − min_matching_frames`` missed frames on
     top of that. Mirrored bit-exactly by
     :func:`sql_dedup_video_phash` (suite qa48)."""
-    from .datapipe import phash_expr
+    from .datapipe import band_split_expr, phash_expr
 
     assert bits % bands == 0 and bits <= 62
     band_width = bits // bands
-    mask = (1 << band_width) - 1
 
     # columns=: the signature path reads only (id, frame) — without the
     # projection the video bytes ride Python→JVM num_frames times just
@@ -638,18 +637,7 @@ def dedup_video_phash(
     ).persist()
     banded = sig.select(
         "__id", "__f", "__ph",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bidx"),
-                        F.shiftright(F.col("__ph"), b * band_width)
-                        .bitwiseAND(F.lit(mask)).alias("bval"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__b"),
+        band_split_expr(F.col("__ph"), bands, band_width),
     ).select("__id", "__f", "__ph",
              F.col("__b.bidx").alias("bidx"),
              F.col("__b.bval").alias("bval"))

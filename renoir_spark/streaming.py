@@ -328,6 +328,135 @@ def _kmv_jaccard_ge(sa: set, sb: set, k: int, threshold: float) -> bool:
     return inter / len(u) >= threshold
 
 
+def _bucket_state_dedup(
+    stream,
+    name: str,
+    src,
+    id_col: str,
+    *,
+    delay: str,
+    parse,
+    match,
+    bucket_cap: Optional[int] = None,
+    out_cols: Sequence[str] = ("bidx",),
+):
+    """The one keyed stateful kernel of the streaming near-duplicate
+    family (:func:`dedup_minhash_stream`, :func:`dedup_phash_stream`,
+    :func:`dedup_embedding_stream`): a greedy in-bucket match on
+    ``applyInPandasWithState``. Each operator supplies only its JVM
+    signature chain ``src`` (one row per (item, bucket) with ``__id``,
+    ``__ts``, the state key ``__g`` and whatever ``parse`` and
+    ``out_cols`` read) and two functions:
+
+    - ``parse(rec) -> (bucket, payload)``: the row's bucket key and the
+      payload tuple stored after ``(id, ts_us)`` in its state entry. A
+      ``None`` bucket never matches and never enters state;
+    - ``match(payload, entry) -> bool``: the verify test against one
+      earlier state entry.
+
+    Family contract. The state key is ``hash(bucket) % state_groups``
+    with a per-bucket dict inside each group — semantics are identical
+    (a row is only compared against ITS bucket's entries), while the
+    per-key Python-call overhead stops scaling with bucket cardinality:
+    band buckets are mostly singletons, and one pandas call per bucket
+    measured 18 s for a 5k-doc drain vs 6 s with 1024 coarse groups
+    (same output). ``state_groups`` is the parallelism-vs-call-overhead
+    dial: keep it a few × the state-store partition count. Bucket state
+    holds the entries of the last ``delay`` of event time, evicted by
+    watermark (an entry only drowns copies arriving within ``delay`` of
+    it — the dropDuplicatesWithinWatermark contract), with an
+    ``EventTimeTimeout`` to clear idle groups. Rows are processed in
+    (ts, id) order within a micro-batch, and an item enters state even
+    when itself a duplicate — exactly the batch greedy rule (a dropped
+    item still drowns later copies). Matching is restricted to
+    STRICTLY-EARLIER ``(ts, id)`` state entries, so an out-of-order
+    arrival (legal within the delay) can only degrade to keeping both
+    copies — it can never retroactively drop the event-time winner whose
+    verdict already shipped. ``bucket_cap=n`` keeps each bucket's ``n``
+    most-recent (event time, id) entries: bounded state AND bounded
+    per-row match cost under a one-bucket flood.
+
+    Emits ``(id, ts, *out_cols, matched)`` per row. State is
+    ``{bucket: [(id, ts_us, *payload), …]}`` as pickled bytes, NOT JSON
+    text: the s05 30× curve showed the per-batch loads/dumps of every
+    in-horizon payload as the dominant superlinear cost, and pickle
+    round-trips native sets/tuples/double arrays as they are.
+
+    Reference parity: renoir's keyed stateful map
+    (src/operator/mod.rs:2740-2746) + the watermark-frontier eviction
+    contract (src/operator/start/watermark_frontier.rs:7-60)."""
+    import pickle as _pickle
+
+    import pandas as pd
+
+    df = stream.df
+    if not df.isStreaming:
+        raise ValueError(
+            f"dedup_{name}_stream needs an unbounded stream; use "
+            f"Stream.dedup_{name} for bounded data"
+        )
+    delay_us = _delay_us(delay)
+    id_t = dict(df.dtypes)[id_col]
+    out_names = [id_col, "ts", *out_cols, "matched"]
+    out_schema = ", ".join(
+        [f"{id_col} {id_t}", "ts timestamp",
+         *(f"{c} int" for c in out_cols), "matched boolean"]
+    )
+
+    def _fn(key, pdf_iter, state):
+        store = _pickle.loads(bytes(state.get[0])) if state.exists else {}
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        if wm_us > 0:
+            store = {
+                bk: kept
+                for bk, es in store.items()
+                if (kept := [e for e in es if e[1] >= wm_us - delay_us])
+            }
+        out = []
+        if not state.hasTimedOut:
+            pdfs = list(pdf_iter)
+            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else None
+            if pdf is not None and len(pdf):
+                pdf = pdf.sort_values(["__ts", "__id"])
+                for rec in pdf.to_dict("records"):
+                    bk, payload = parse(rec)
+                    row = (rec["__id"], rec["__ts"],
+                           *[rec[c] for c in out_cols])
+                    if bk is None:
+                        out.append((*row, False))
+                        continue
+                    entries = store.setdefault(bk, [])
+                    ts_us = int(rec["__ts"].value // 1000)
+                    me = (ts_us, rec["__id"])
+                    out.append((*row, any(
+                        (e[1], e[0]) < me and match(payload, e)
+                        for e in entries
+                    )))
+                    entries.append((rec["__id"], ts_us, *payload))
+                    if bucket_cap is not None and len(entries) > bucket_cap:
+                        entries.sort(key=lambda e: (e[1], e[0]))
+                        del entries[: len(entries) - bucket_cap]
+        if store:
+            state.update((_pickle.dumps(store, _pickle.HIGHEST_PROTOCOL),))
+            max_ts_ms = max(e[1] for es in store.values() for e in es) // 1000
+            state.setTimeoutTimestamp(
+                max(max_ts_ms + delay_us // 1000 + 1,
+                    state.getCurrentWatermarkMs() + 1)
+            )
+        elif state.exists:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=out_names)
+
+    return stream._new(
+        src.withWatermark("__ts", delay)
+        .groupBy("__g")
+        .applyInPandasWithState(
+            _fn, out_schema, "s binary", "append", "EventTimeTimeout"
+        )
+    )
+
+
 def dedup_minhash_stream(
     stream,
     text_col: str,
@@ -348,7 +477,11 @@ def dedup_minhash_stream(
     a document is a duplicate iff some EARLIER document (event time,
     ties by id — the streaming analog of batch's smaller-id rule)
     within the watermark horizon shares an LSH band bucket AND passes
-    exact shingle-Jaccard >= ``threshold``.
+    exact shingle-Jaccard >= ``threshold`` (the batch operator's IEEE
+    comparison, size(intersect)/size(union)). State keys, eviction,
+    ordering, strictly-earlier matching and ``state_groups`` follow the
+    family contract of :func:`_bucket_state_dedup`; the bucket is
+    ``(bidx, bhash)`` and each entry is ``(id, ts_us, shingle set)``.
 
     Emits one VERDICT row per (document, band):
     ``(id, ts, bidx, matched)`` — reduce to per-document survivors with
@@ -363,24 +496,7 @@ def dedup_minhash_stream(
     Spark-first shape: the signature chain (normalize → shingles →
     minhash → band hashes) is the SAME Column expression pipeline as the
     batch operator — only candidate matching moves into
-    ``applyInPandasWithState``. Matching is per ``(bidx, bhash)`` band
-    bucket, but the STATE KEY is ``hash(bidx, bhash) % state_groups``
-    with a per-bucket dict inside each group — semantics are identical
-    (a row is only compared against ITS bucket's entries), while the
-    per-key Python-call overhead stops scaling with bucket cardinality:
-    band buckets are mostly singletons, and one pandas call per bucket
-    measured 18 s for a 5k-doc drain vs 6 s with 1024 coarse groups
-    (same output). ``state_groups`` is the parallelism-vs-call-overhead
-    dial: keep it a few × the state-store partition count. Bucket state
-    holds the docs of the last ``delay`` of event time (id, ts, shingle
-    set), evicted by watermark, with an ``EventTimeTimeout`` to clear
-    idle groups. Rows are processed in (ts, id) order within a
-    micro-batch, and a doc enters state even when itself a duplicate —
-    exactly the batch greedy rule (a dropped doc still drowns later
-    copies). Matching is restricted to STRICTLY-EARLIER ``(ts, id)``
-    state entries, so an out-of-order arrival (legal within the delay)
-    can only degrade to keeping both copies — it can never retroactively
-    drop the event-time winner whose verdict already shipped.
+    ``applyInPandasWithState``.
 
     Scale: state is O(arrival rate x delay) overall, spread over
     ``state_groups`` keys; the shingle sets DO ride the band explode
@@ -418,25 +534,10 @@ def dedup_minhash_stream(
     over-crowded bucket is by definition a NON-discriminative band,
     where ~all pairs are false candidates anyway (flood-parity test in
     tests/test_round10.py; measured row in docs/SCALING.md).
-
-    Reference parity: renoir's keyed stateful map
-    (src/operator/mod.rs:2740-2746) + the watermark-frontier eviction
-    contract (src/operator/start/watermark_frontier.rs:7-60).
     """
-    import pickle as _pickle
-
-    import pandas as pd
-
     from .datapipe import minhash_bands_expr
 
     df = stream.df
-    if not df.isStreaming:
-        raise ValueError(
-            "dedup_minhash_stream needs an unbounded stream; use "
-            "Stream.dedup_minhash for bounded data"
-        )
-    delay_us = _delay_us(delay)
-
     sig = minhash_bands_expr(
         df.select(
             F.col(id_col).alias("__id"),
@@ -465,7 +566,7 @@ def dedup_minhash_stream(
                 1, kmv_k,
             ),
         )
-    buckets = (
+    src = (
         sig.select(
             "__id", "__ts", "__sh", F.explode("__bands").alias("__b")
         )
@@ -477,89 +578,24 @@ def dedup_minhash_stream(
         .withColumn(
             "__g", F.pmod(F.hash("bidx", "bhash"), F.lit(state_groups))
         )
-        .withWatermark("__ts", delay)
     )
 
-    id_t = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_t}, ts timestamp, bidx int, matched boolean"
+    def parse(rec):
+        sh = (set(map(int, rec["__sh"])) if kmv_k is not None
+              else set(rec["__sh"]))
+        return (int(rec["bidx"]), int(rec["bhash"])), (sh,)
 
-    def _fn(key, pdf_iter, state):
-        # state: {(bidx, bhash): [(id, ts_us, {shingles…}), …]} — pickled
-        # bytes, NOT JSON text: the s05 30× curve showed the per-batch
-        # loads/dumps of every in-horizon shingle set as the dominant
-        # superlinear cost, and pickle round-trips native sets/tuples
-        # (no per-batch set() rebuild, no sorted() canonicalization).
-        store = _pickle.loads(bytes(state.get[0])) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # watermark eviction: a doc only drowns copies arriving within
-        # `delay` of it (the dropDuplicatesWithinWatermark contract)
-        if wm_us > 0:
-            store = {
-                bk: kept
-                for bk, es in store.items()
-                if (kept := [e for e in es if e[1] >= wm_us - delay_us])
-            }
-        out = []
-        if not state.hasTimedOut:
-            pdfs = [p for p in pdf_iter]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else None
-            if pdf is not None and len(pdf):
-                pdf = pdf.sort_values(["__ts", "__id"])
-                for rec in pdf.to_dict("records"):
-                    sh = (set(map(int, rec["__sh"])) if kmv_k is not None
-                          else set(rec["__sh"]))
-                    bk = (int(rec["bidx"]), int(rec["bhash"]))
-                    entries = store.setdefault(bk, [])
-                    ts_us = int(rec["__ts"].value // 1000)
-                    me = (ts_us, rec["__id"])
-                    # same IEEE comparison as the batch operator:
-                    # size(intersect)/size(union) >= threshold. Only
-                    # STRICTLY-EARLIER (ts, id) entries can drown this
-                    # row: an out-of-order arrival (legal within the
-                    # watermark delay) must never flip who survives —
-                    # the later doc keeps its already-emitted verdict,
-                    # so matching against it would drop BOTH copies'
-                    # event-time winner. Degrades to keeping both
-                    # (false negative), never to dropping the earlier.
-                    if kmv_k is not None:
-                        matched = any(
-                            (e[1], e[0]) < me
-                            and _kmv_jaccard_ge(sh, e[2], kmv_k, threshold)
-                            for e in entries
-                        )
-                    else:
-                        matched = any(
-                            (e[1], e[0]) < me
-                            and len(sh | e[2]) > 0
-                            and len(sh & e[2]) / len(sh | e[2]) >= threshold
-                            for e in entries
-                        )
-                    out.append((rec["__id"], rec["__ts"], rec["bidx"], matched))
-                    entries.append((rec["__id"], ts_us, sh))
-                    if bucket_cap is not None and len(entries) > bucket_cap:
-                        # keep the bucket's most-recent `cap` entries by
-                        # (event time, id) — bounded state AND bounded
-                        # per-row match cost under a boilerplate-band
-                        # flood (docstring miss contract)
-                        entries.sort(key=lambda e: (e[1], e[0]))
-                        del entries[: len(entries) - bucket_cap]
-        if store:
-            state.update((_pickle.dumps(store, _pickle.HIGHEST_PROTOCOL),))
-            max_ts_ms = max(e[1] for es in store.values() for e in es) // 1000
-            state.setTimeoutTimestamp(
-                max(max_ts_ms + delay_us // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=[id_col, "ts", "bidx", "matched"])
+    if kmv_k is not None:
+        def match(p, e):
+            return _kmv_jaccard_ge(p[0], e[2], kmv_k, threshold)
+    else:
+        def match(p, e):
+            u = len(p[0] | e[2])
+            return u > 0 and len(p[0] & e[2]) / u >= threshold
 
-    grouped = buckets.groupBy("__g")
-    return stream._new(
-        grouped.applyInPandasWithState(
-            _fn, out_schema, "s binary", "append", "EventTimeTimeout"
-        )
+    return _bucket_state_dedup(
+        stream, "minhash", src, id_col, delay=delay, parse=parse,
+        match=match, bucket_cap=bucket_cap,
     )
 
 
@@ -583,7 +619,8 @@ def dedup_phash_stream(
     within the watermark horizon shares an LSH band of its signature
     AND sits within Hamming distance ``max_hamming``. Completes the
     streaming dedup family for the multimodal layer (exact / URL /
-    MinHash / semantic / perceptual).
+    MinHash / semantic / perceptual); state, eviction and matching
+    follow the family contract of :func:`_bucket_state_dedup`.
 
     Emits one VERDICT row per (item, band): ``(id, ts, bidx, matched)``
     — the SAME verdict schema as :func:`dedup_minhash_stream`, so
@@ -596,12 +633,11 @@ def dedup_phash_stream(
     verdict rule), computed map-side on the decoded feature array —
     typically straight after a ``decode_image(n_features=bits)`` stage
     in the same streaming query; only band matching is Python state.
-    State per band bucket holds (id, ts_us, signature-long) — ~24
-    bytes/entry, the LIGHTEST of the streaming dedup family (no
-    shingle sets, no vectors), watermark-evicted with EventTimeTimeout
-    on idle groups; ``state_groups`` coarsening and strictly-earlier
-    matching follow the family contract (out-of-order arrivals degrade
-    to keeping both copies, never to dropping the event-time winner).
+    State per ``(bidx, bval)`` band bucket holds (id, ts_us,
+    signature-long) — ~24 bytes/entry, the LIGHTEST of the streaming
+    dedup family (no shingle sets, no vectors). An item with NULL
+    features has no decoded evidence: it is never a duplicate and never
+    drowns others (batch parity: NULL band values join nothing).
 
     ``bits`` must not exceed the decode stage's feature count — bands
     past the features are constant zero and every row becomes a
@@ -619,44 +655,18 @@ def dedup_phash_stream(
     earlier copy has been pushed out by ≥ ``n`` newer entries — and in
     a flooded bucket the newest entries are near-certain matches for a
     true duplicate anyway (planted test)."""
-    import pickle as _pickle
+    from .datapipe import band_split_expr, phash_expr
 
-    import pandas as pd
-
-    from .datapipe import phash_expr
-
-    df = stream.df
-    if not df.isStreaming:
-        raise ValueError(
-            "dedup_phash_stream needs an unbounded stream; use "
-            "Stream.dedup_phash for bounded data"
-        )
     assert bits % bands == 0 and bits <= 62
-    band_width = bits // bands
-    mask = (1 << band_width) - 1
-    delay_us = _delay_us(delay)
-
-    sig = df.select(
+    sig = stream.df.select(
         F.col(id_col).alias("__id"),
         to_col(ts_col).cast("timestamp").alias("__ts"),
         phash_expr(to_col(features_col), bits).alias("__ph"),
     )
-    buckets = (
+    src = (
         sig.select(
             "__id", "__ts", "__ph",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bidx"),
-                            F.shiftright(F.col("__ph"), b * band_width)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bval"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("__b"),
+            band_split_expr(F.col("__ph"), bands, bits // bands),
         )
         .select(
             "__id", "__ts",
@@ -677,77 +687,19 @@ def dedup_phash_stream(
         .withColumn(
             "__g", F.pmod(F.hash("bidx", "bval"), F.lit(state_groups))
         )
-        .withWatermark("__ts", delay)
     )
 
-    id_t = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_t}, ts timestamp, bidx int, matched boolean"
+    def parse(rec):
+        if rec["__ph_null"]:
+            return None, None
+        return (int(rec["bidx"]), int(rec["bval"])), (int(rec["__ph"]),)
 
-    def _fn(key, pdf_iter, state):
-        # state: {(bidx, bval): [(id, ts_us, phash), …]} — pickled
-        store = _pickle.loads(bytes(state.get[0])) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if wm_us > 0:
-            store = {
-                bk: kept
-                for bk, es in store.items()
-                if (kept := [e for e in es if e[1] >= wm_us - delay_us])
-            }
-        out = []
-        if not state.hasTimedOut:
-            pdfs = [p for p in pdf_iter]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else None
-            if pdf is not None and len(pdf):
-                pdf = pdf.sort_values(["__ts", "__id"])
-                for rec in pdf.to_dict("records"):
-                    if rec["__ph_null"]:
-                        # no decoded evidence (NULL features, flagged
-                        # JVM-side) — never a duplicate, never drowns
-                        # others (batch parity: NULL band values join
-                        # nothing)
-                        out.append(
-                            (rec["__id"], rec["__ts"], int(rec["bidx"]),
-                             False)
-                        )
-                        continue
-                    ph = int(rec["__ph"])
-                    bk = (int(rec["bidx"]), int(rec["bval"]))
-                    entries = store.setdefault(bk, [])
-                    ts_us = int(rec["__ts"].value // 1000)
-                    me = (ts_us, rec["__id"])
-                    matched = any(
-                        (e[1], e[0]) < me
-                        and (ph ^ e[2]).bit_count() <= max_hamming
-                        for e in entries
-                    )
-                    out.append(
-                        (rec["__id"], rec["__ts"], int(rec["bidx"]), matched)
-                    )
-                    entries.append((rec["__id"], ts_us, ph))
-                    if bucket_cap is not None and len(entries) > bucket_cap:
-                        # keep the bucket's most-recent `cap` entries
-                        # by (event time, id) — bounded state AND
-                        # bounded per-row match cost under a
-                        # constant-band flood (docstring miss contract)
-                        entries.sort(key=lambda e: (e[1], e[0]))
-                        del entries[: len(entries) - bucket_cap]
-        if store:
-            state.update((_pickle.dumps(store, _pickle.HIGHEST_PROTOCOL),))
-            max_ts_ms = max(e[1] for es in store.values() for e in es) // 1000
-            state.setTimeoutTimestamp(
-                max(max_ts_ms + delay_us // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=[id_col, "ts", "bidx", "matched"])
+    def match(p, e):
+        return (p[0] ^ e[2]).bit_count() <= max_hamming
 
-    grouped = buckets.groupBy("__g")
-    return stream._new(
-        grouped.applyInPandasWithState(
-            _fn, out_schema, "s binary", "append", "EventTimeTimeout"
-        )
+    return _bucket_state_dedup(
+        stream, "phash", src, id_col, delay=delay, parse=parse,
+        match=match, bucket_cap=bucket_cap,
     )
 
 
@@ -768,7 +720,9 @@ def dedup_embedding_stream(
     greedy rule: a vector is a duplicate iff some EARLIER vector (event
     time, ties by id) within the watermark horizon shares its sign-LSH
     bucket AND scores cosine ≥ ``threshold``. Completes the streaming
-    dedup family (exact / canonical-URL / MinHash-fuzzy / semantic).
+    dedup family (exact / canonical-URL / MinHash-fuzzy / semantic);
+    state, eviction and matching follow the family contract of
+    :func:`_bucket_state_dedup`.
 
     Emits ONE verdict row per vector: ``(id, ts, matched)`` — unlike
     the MinHash variant there is no band explode (one bucket per
@@ -778,112 +732,46 @@ def dedup_embedding_stream(
 
     Spark-first shape: bucket + L2 norm are the SAME JVM Column
     expressions as the batch operator (computed once, map-side); only
-    bucket matching is Python state. State key = ``hash(bucket) %
-    state_groups`` with a per-bucket dict inside (the s05 coarsening
-    dial — semantics identical, per-key Python-call overhead bounded).
-    Bucket state holds (id, ts, vector, norm) for the last ``delay`` of
-    event time, watermark-evicted, EventTimeTimeout clears idle groups.
-    Rows process in (ts, id) order; a duplicate still enters state (the
-    batch greedy rule — a dropped vector drowns later copies) and only
-    STRICTLY-EARLIER entries can drown a row, so out-of-order arrivals
-    degrade to keeping both copies, never to dropping the event-time
-    winner. The cosine is the batch operator's exact IEEE recipe
-    (ascending-dim dot fold, zero-norm → 0.0, round 6).
+    bucket matching is Python state. Bucket state holds (id, ts_us,
+    vector as a double array, norm). The cosine is the batch operator's
+    exact IEEE recipe (ascending-dim dot fold, zero-norm → 0.0, round 6).
 
     Scale: state is O(arrival rate × delay) vectors spread over
     ``state_groups`` keys; per-row work is |bucket| dot products — the
     same in-bucket cost as the batch self-join, bounded by the LSH
     bucket granularity (``n_planes`` is the recall-vs-work dial, as in
     batch)."""
-    import pickle as _pickle
     from array import array as _array
-
-    import pandas as pd
 
     from .datapipe import _bucket_expr, _norm2, lsh_planes
 
-    df = stream.df
-    if not df.isStreaming:
-        raise ValueError(
-            "dedup_embedding_stream needs an unbounded stream; use "
-            "Stream.dedup_embedding for bounded data"
-        )
-    delay_us = _delay_us(delay)
     planes = lsh_planes(dim, n_planes)
-    src = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            to_col(ts_col).cast("timestamp").alias("__ts"),
-            F.col(vec_col).alias("__v"),
-            _norm2(F.col(vec_col)).alias("__nrm"),
-            _bucket_expr(F.col(vec_col), planes).alias("__bkt"),
-        )
-        .withColumn("__g", F.pmod(F.hash("__bkt"), F.lit(state_groups)))
-        .withWatermark("__ts", delay)
-    )
-    id_t = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_t}, ts timestamp, matched boolean"
+    src = stream.df.select(
+        F.col(id_col).alias("__id"),
+        to_col(ts_col).cast("timestamp").alias("__ts"),
+        F.col(vec_col).alias("__v"),
+        _norm2(F.col(vec_col)).alias("__nrm"),
+        _bucket_expr(F.col(vec_col), planes).alias("__bkt"),
+    ).withColumn("__g", F.pmod(F.hash("__bkt"), F.lit(state_groups)))
 
-    def _fn(key, pdf_iter, state):
-        # state: {bkt: [(id, ts_us, array('d', vec), nrm), …]} — pickled
-        # bytes, not JSON text: vectors round-trip as machine-repr double
-        # arrays instead of being re-parsed from decimal text every
-        # micro-batch (the s05/s06 dominant per-batch cost).
-        store = _pickle.loads(bytes(state.get[0])) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if wm_us > 0:
-            store = {
-                bk: kept
-                for bk, es in store.items()
-                if (kept := [e for e in es if e[1] >= wm_us - delay_us])
-            }
-        out = []
-        if not state.hasTimedOut:
-            pdfs = [p for p in pdf_iter]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else None
-            if pdf is not None and len(pdf):
-                pdf = pdf.sort_values(["__ts", "__id"])
-                for rec in pdf.to_dict("records"):
-                    v = _array("d", (float(x) for x in rec["__v"]))
-                    nrm = float(rec["__nrm"])
-                    bk = int(rec["__bkt"])
-                    entries = store.setdefault(bk, [])
-                    ts_us = int(rec["__ts"].value // 1000)
-                    me = (ts_us, rec["__id"])
-                    matched = False
-                    for e in entries:
-                        if (e[1], e[0]) >= me:
-                            continue
-                        denom = nrm * e[3]
-                        if denom == 0.0:
-                            continue
-                        # ascending-dim left fold — the batch _dot's
-                        # association, so verdicts agree bit-for-bit
-                        dot = 0.0
-                        for x, y in zip(v, e[2]):
-                            dot += x * y
-                        if round(dot / denom, 6) >= threshold:
-                            matched = True
-                            break
-                    out.append((rec["__id"], rec["__ts"], matched))
-                    entries.append((rec["__id"], ts_us, v, nrm))
-        if store:
-            state.update((_pickle.dumps(store, _pickle.HIGHEST_PROTOCOL),))
-            max_ts_ms = max(e[1] for es in store.values() for e in es) // 1000
-            state.setTimeoutTimestamp(
-                max(max_ts_ms + delay_us // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=[id_col, "ts", "matched"])
+    def parse(rec):
+        v = _array("d", (float(x) for x in rec["__v"]))
+        return int(rec["__bkt"]), (v, float(rec["__nrm"]))
 
-    grouped = src.groupBy("__g")
-    return stream._new(
-        grouped.applyInPandasWithState(
-            _fn, out_schema, "s binary", "append", "EventTimeTimeout"
-        )
+    def match(p, e):
+        denom = p[1] * e[3]
+        if denom == 0.0:
+            return False
+        # ascending-dim left fold — the batch _dot's association, so
+        # verdicts agree bit-for-bit
+        dot = 0.0
+        for x, y in zip(p[0], e[2]):
+            dot += x * y
+        return round(dot / denom, 6) >= threshold
+
+    return _bucket_state_dedup(
+        stream, "embedding", src, id_col, delay=delay, parse=parse,
+        match=match, out_cols=(),
     )
 
 
@@ -1153,6 +1041,18 @@ def windowed_top_k_stream(
     )
 
 
+def _key_schema(stream, keys) -> str:
+    """DDL field list (``name type, …``) of the ``keys`` columns, in the
+    stream's schema order — the key prefix of a keyed fold's output
+    schema."""
+    ks = set(keys)
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in stream.df.schema.fields
+        if f.name in ks
+    )
+
+
 def last_k_window_stream(
     stream,
     keys: Sequence[str],
@@ -1190,17 +1090,14 @@ def last_k_window_stream(
         ) if rows else None
         return out, (seq, buf)
 
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.df.schema.fields
-        if f.name in set(keys)
-    )
     return keyed_map_with_state(
         stream,
         keys,
         _fold,
         state_schema="seq long, buf array<double>",
-        out_schema=f"{key_fields}, seq long, n long, sum_v double",
+        out_schema=(
+            f"{_key_schema(stream, keys)}, seq long, n long, sum_v double"
+        ),
     )
 
 
@@ -1254,12 +1151,9 @@ def transaction_window_stream(
         df = df.withColumn("__wts", to_col(ts_col).cast("timestamp"))
         df = df.withWatermark("__wts", watermark)
 
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.df.schema.fields
-        if f.name in set(keys)
+    out_schema = (
+        f"{_key_schema(stream, keys)}, window_id long, {out_extra_schema}"
     )
-    out_schema = f"{key_fields}, window_id long, {out_extra_schema}"
 
     def _jsonable(v):
         if isinstance(v, pd.Timestamp):
@@ -1358,15 +1252,12 @@ def count_window_fold_stream(
         ) if rows else None
         return out, (wid, buf)
 
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.df.schema.fields
-        if f.name in set(keys)
-    )
     return keyed_map_with_state(
         stream,
         keys,
         _fold,
         state_schema="wid long, buf array<double>",
-        out_schema=f"{key_fields}, window_id long, n long, sum_v double",
+        out_schema=(
+            f"{_key_schema(stream, keys)}, window_id long, n long, sum_v double"
+        ),
     )

@@ -123,11 +123,16 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(ctx, sf_dir, "lineitem").filter(
         "l_shipdate > timestamp'1996-03-15 00:00:00'"
     )
+    # money as the TPC-H decimal(15,2): the sum is exact, so the rounded
+    # cent cannot depend on the order the engine adds in (a double sum on
+    # a .xx5 boundary rounds either way); the oracle does the same
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    disc = F.col("l_discount").cast("decimal(15,2)")
     return (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .group_by("o_orderkey")
-        .fold(revenue=F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2))
+        .fold(revenue=F.round(F.sum(price * (1 - disc)), 2).cast("double"))
         .sorted_limit_by([F.col("revenue").desc(), F.col("o_orderkey")], 10)
         .df
     )
@@ -135,7 +140,9 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_Q03 = """
 SELECT o_orderkey,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE) AS revenue
 FROM customer, orders, lineitem
 WHERE c_mktsegment = 'BUILDING'
   AND c_custkey = o_custkey AND l_orderkey = o_orderkey

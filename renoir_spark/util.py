@@ -32,16 +32,6 @@ def named_cols(exprs, named) -> list[Column]:
     return out
 
 
-def ts_seconds(c) -> Column:
-    """Numeric epoch seconds for a timestamp/numeric column.
-
-    Timestamps become DOUBLE seconds since epoch (UTC); numeric columns
-    pass through as DOUBLE. Keeps band/interval arithmetic type-stable.
-    """
-    col = to_col(c)
-    return col.cast("timestamp").cast("double")
-
-
 def ts_micros(c) -> Column:
     """Exact epoch microseconds (LONG) — integer arithmetic so band/range
     boundaries are bit-exact (no double rounding at the 16th digit)."""

@@ -747,26 +747,6 @@ def test_streaming_minhash_survivors_streaming_phase2(ctx, tmp_path):
     assert {i for i, _ in _MH_DOCS} - got  # something was actually dropped
 
 
-def test_streaming_minhash_out_of_order_never_drops_event_time_winner(ctx):
-    """An out-of-order arrival (later push, EARLIER event time, within
-    the watermark delay) must not be drowned by the later-ts doc whose
-    verdict already shipped: matching is restricted to strictly-earlier
-    (ts, id) state, so disorder degrades to keeping both — it can never
-    invert who survives."""
-    a = "one two three four five six seven eight nine ten eleven twelve"
-    pushes = [
-        [(1, _ts(2000), a)],  # later event time arrives FIRST
-        [(0, _ts(1995), a)],  # event-time winner arrives second
-    ]
-    got, rows = _mh_stream_survivors(ctx, pushes, delay="1 hour")
-    assert got == {0, 1}  # both kept; doc 0 was NOT matched against doc 1
-    # and the in-order run of the same data drops the later doc
-    got2, _ = _mh_stream_survivors(
-        ctx, [[(0, _ts(1995), a)], [(1, _ts(2000), a)]], delay="1 hour"
-    )
-    assert got2 == {0}
-
-
 def test_delay_us_parses_spark_interval_grammar():
     from renoir_spark.streaming import _delay_us
 
@@ -912,3 +892,56 @@ def test_streaming_embedding_state_evicted_past_delay(ctx):
     ]
     got, _ = _emb_stream_survivors(ctx, pushes, delay="10 seconds")
     assert got == {0, 1, 2}
+
+
+# ------------------------------------------------------------------ #
+# the whole streaming dedup family: one kernel, one ordering contract
+# ------------------------------------------------------------------ #
+
+def _ph_stream_survivors(ctx, pushes, *, delay="1 hour"):
+    from renoir_spark.streaming import (
+        dedup_phash_stream,
+        minhash_survivors,
+        run_to_completion,
+    )
+
+    ch = ctx.stream_channel("id long, ts timestamp, features array<float>")
+    for rows in pushes:
+        ch.push(rows)
+    verdicts = dedup_phash_stream(
+        ch.stream(max_files_per_trigger=1), "features", "id", ts_col="ts",
+        delay=delay, bits=8, bands=4, max_hamming=1,
+    )
+    rows = run_to_completion(verdicts.df, output_mode="append")
+    bounded = ctx.from_df(ctx.spark.createDataFrame(rows, verdicts.df.schema))
+    return {r.id for r in minhash_survivors(bounded, "id").collect_vec()}, rows
+
+
+# operator -> (survivor runner, an item that its own copy duplicates)
+_FAMILY = {
+    "minhash": (
+        _mh_stream_survivors,
+        "one two three four five six seven eight nine ten eleven twelve",
+    ),
+    "phash": (_ph_stream_survivors, [0.9, 0.1, 0.9, 0.1, 0.9, 0.1, 0.9, 0.1]),
+    "embedding": (_emb_stream_survivors, [1.0, 0.5, -0.25, 0.0]),
+}
+
+
+@pytest.mark.parametrize("op", list(_FAMILY))
+def test_streaming_out_of_order_never_drops_event_time_winner(ctx, op):
+    """An out-of-order arrival (later push, EARLIER event time, within
+    the watermark delay) must not be drowned by the later-ts item whose
+    verdict already shipped: matching is restricted to strictly-earlier
+    (ts, id) state, so disorder degrades to keeping both — it can never
+    invert who survives."""
+    survivors, item = _FAMILY[op]
+    pushes = [
+        [(1, _ts(2000), item)],  # later event time arrives FIRST
+        [(0, _ts(1995), item)],  # event-time winner arrives second
+    ]
+    got, _ = survivors(ctx, pushes, delay="1 hour")
+    assert got == {0, 1}  # both kept; item 0 was NOT matched against item 1
+    # and the in-order run of the same data drops the later item
+    got2, _ = survivors(ctx, pushes[::-1], delay="1 hour")
+    assert got2 == {0}
