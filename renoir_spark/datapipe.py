@@ -29,7 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import to_col
+from .iteration import loop_partitions
+from .util import count_rows, to_col
 
 # --------------------------------------------------------------------- #
 # shared deterministic hashing / text normalization
@@ -713,14 +714,15 @@ def _cluster_from_pairs(stream, pairs_df, id_col: str, *, max_iter: int,
     # size the component loop to the DUPLICATE SUBGRAPH, not the corpus:
     # the count materializes the pair relation once (paid anyway by
     # round 1) and the loop then shuffles at a width matched to the edge
-    # volume — at sf0.1 that's 1-2 partitions instead of 32 empty-task
-    # rounds; at 100 TB (billions of edges) it scales back up. The edge
-    # cache is hash-partitioned on src at exactly the loop width, so
-    # every round's state⋈edges join reuses the layout instead of
-    # re-scanning a corpus-wide cache with hundreds of near-empty tasks.
-    n_edges = 2 * p.count()
-    loop_parts = max(1, min(int(stream.df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32")), n_edges // 100_000 + 1))
+    # volume (iteration.loop_partitions) — at sf0.1 that's 1-2 partitions
+    # instead of 32 empty-task rounds; at 100 TB (billions of edges) it
+    # scales back up. The edge cache is hash-partitioned on src at
+    # exactly the loop width, so every round's state⋈edges join reuses
+    # the layout instead of re-scanning a corpus-wide cache with hundreds
+    # of near-empty tasks.
+    spark = stream.df.sparkSession
+    n_edges = 2 * count_rows(p)
+    loop_parts = loop_partitions(spark, n_edges)
     edges = edges0.repartition(loop_parts, "src").persist()
     ctx = stream.ctx
     init = ctx.from_df(
@@ -728,14 +730,13 @@ def _cluster_from_pairs(stream, pairs_df, id_col: str, *, max_iter: int,
         .withColumn("comp", F.col("v"))
     ).key_by("v")
 
-    # Measured and REVERTED (round 11, guide §1 re-measure): folding
-    # TWO min-label hops into each round (fewer barriers, same monotone
-    # fixpoint) read 2.1x SLOWER at sf0.1 (q83 4.8→10.1 s, qa21
-    # 5.9→12.1 s; still 6.5/7.5 s with checkpoint_every=1) — the
-    # two-hop delta references the state 4x per round, so the logical
-    # plan grows ~4^rounds between checkpoints and Catalyst ANALYSIS
-    # dwarfs the barrier latency it was meant to save. The single-hop
-    # body with per-2-round checkpoints remains the measured optimum.
+    # One min-label hop per round. Round 11 measured a two-hop body
+    # (fewer barriers, same monotone fixpoint) 2.1x SLOWER at sf0.1
+    # (q83 4.8→10.1 s, qa21 5.9→12.1 s) and blamed plan growth between
+    # lineage cuts (the two-hop delta reads the state 4x per round).
+    # delta_iterate now cuts lineage every round, so that cause is gone;
+    # but the same variant with an eager cut every round still read
+    # 6.5/7.5 s, so re-measure before retrying it.
     def body(state, _it):
         cand_c = (
             state.df.join(edges, state.df["v"] == edges["src"])
@@ -748,17 +749,18 @@ def _cluster_from_pairs(stream, pairs_df, id_col: str, *, max_iter: int,
             .select("v", F.col("new_comp").alias("comp"))
         )
 
-    # checkpoint_every=2: each round's merge references the prior state
-    # twice, so plan ANALYSIS doubles per round between checkpoints; the
-    # component state is small (duplicate-subgraph vertices), making
-    # frequent lineage cuts near-free while keeping every round's
-    # compile O(1)
-    final = init.delta_iterate(
-        max_iter, body, checkpoint_every=2, shuffle_partitions=loop_parts
-    )
+    final = init.delta_iterate(max_iter, body, shuffle_partitions=loop_parts)
     comp_map = final.to_stream().df.select(
         F.col("v").alias("__cv"), F.col("comp").alias("cluster_id")
     )
+    # the loop returns a checkpoint whose size estimate is its last merge
+    # plan's (a product of the join inputs), not its real size; the map
+    # holds at most one 24-byte (v, comp) row per edge, so broadcast it
+    # when that bound is under the session's broadcast threshold
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if n_edges * 24 <= threshold:
+        comp_map = F.broadcast(comp_map)
     out = (
         stream.df.join(comp_map, stream.df[id_col] == F.col("__cv"), "left")
         .drop("__cv")

@@ -8,45 +8,67 @@ is a DRIVER loop over DataFrames — which is exactly what renoir's
 IterationLeader does too (collect state updates, decide, broadcast), just
 expressed in the host language.
 
-Scale discipline (the part renoir gets for free from its runtime):
+Scale discipline (the part renoir gets for free from its runtime) is one
+rule for every round's output (the ``iterate``/``replay`` round output, the
+``delta_iterate`` delta and merged state):
 
-- every iteration's output is ``persist()``-ed and the previous one released,
-  so the feedback never recomputes the whole history;
-- lineage is cut with ``localCheckpoint(eager=True)`` every
-  ``checkpoint_every`` iterations — without this the logical plan doubles
-  per round and Catalyst analysis time explodes long before the data does;
-- the per-iteration driver synchronization is ONE small action (the state
-  fold / delta count), mirroring renoir's leader barrier
-  (src/operator/iteration/leader.rs:26-100).
+- it becomes ``localCheckpoint(eager=False)``, so the next round's body
+  always sees an O(1) ``LogicalRDD`` leaf — Catalyst never re-analyses the
+  loop's history (without the cut the plan doubles per round);
+- the round's ONE driver action (the delta count, or the output count)
+  is the barrier that materializes it, mirroring renoir's leader barrier
+  (src/operator/iteration/leader.rs:26-100) — no extra job;
+- once the barrier has materialized a frame's successor, the frame is
+  freed with ``util.free_local_checkpoint``: at most two generations are
+  alive, and the returned frame is the last materialized checkpoint;
+- when ``body``, ``merge`` or ``state_update`` raises, every generation
+  the loop holds is freed before the exception propagates.
+
+Trade-off: a freed generation has no lineage, so a lost checkpoint block
+of a live generation fails the loop (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) in
+whatever round it is read, rather than being recomputed from the input.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Callable, Optional, Sequence, Tuple
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import free_local_checkpoint, is_local_checkpoint
+from .util import free_local_checkpoint
 
 
-def _release_round(df: DataFrame, stale: list) -> None:
-    """Release a superseded per-round frame. ``persist``-ed frames are
-    freed immediately (later rounds recompute through lineage if ever
-    evicted — slow, never wrong). Checkpointed frames are DEFERRED onto
-    ``stale``: a live persist may still hold a recompute path through
-    them (freeing a checkpoint severs lineage — a cache-evicted
-    descendant would die with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so
-    their blocks are only freed after the loop's final eager checkpoint
-    makes every intermediate unreachable. Bounds the old behavior —
-    Dataset.unpersist silently NO-OPs on checkpoint blocks, leaking
-    ~num_iterations/checkpoint_every state copies per call until
-    session end — to the loop's own lifetime."""
-    if is_local_checkpoint(df):
-        stale.append(df)
-    else:
-        df.unpersist()
+def _free_all_but(held: list, *keep: DataFrame) -> None:
+    """Free every loop-made frame in ``held`` except ``keep``; call only
+    after the barrier has materialized the kept frames, so nothing reads
+    the freed ones again."""
+    for d in held:
+        if not any(d is k for k in keep):
+            free_local_checkpoint(d)
+    held[:] = [d for d in held if any(d is k for k in keep)]
+
+
+@contextmanager
+def _generations():
+    """The list of frames a loop made and still holds; if the loop
+    raises, all of them are freed before the exception propagates."""
+    held: list = []
+    try:
+        yield held
+    except BaseException:
+        _free_all_but(held)
+        raise
+
+
+def loop_partitions(spark, n_edges: int) -> int:
+    """Shuffle width for a graph loop over ``n_edges`` edges: one
+    partition per 100k edges, capped at the session width — a small
+    graph iterates in one or two partitions instead of paying rounds ×
+    session-width near-empty tasks, a large one scales back up."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return max(1, min(width, n_edges // 100_000 + 1))
 
 
 @contextmanager
@@ -100,16 +122,6 @@ class IterationStateHandle:
         return self._value
 
 
-def _materialize(df: DataFrame, it: int, checkpoint_every: int) -> DataFrame:
-    """Persist an iteration result; cut lineage periodically."""
-    if checkpoint_every and (it + 1) % checkpoint_every == 0:
-        # localCheckpoint truncates the logical plan (eager) — the driver
-        # loop's plan would otherwise grow linearly and analysis cost
-        # super-linearly with the iteration count.
-        return df.localCheckpoint(eager=True)
-    return df.persist()
-
-
 def iterate(
     stream,
     num_iterations: int,
@@ -118,7 +130,6 @@ def iterate(
     state_update: Callable[[object, DataFrame], object],
     loop_condition: Optional[Callable[[object], bool]] = None,
     *,
-    checkpoint_every: int = 4,
     adaptive: Optional[bool] = False,
     shuffle_partitions: Optional[int] = None,
 ):
@@ -138,35 +149,18 @@ def iterate(
     """
     df = stream.df
     state = initial_state
-    prev_cached: Optional[DataFrame] = None
-    stale: list = []
-    with _loop_confs(df.sparkSession, adaptive, shuffle_partitions):
-        for it in range(num_iterations):
-            out = body(stream._new(df), IterationStateHandle(state)).df
-            out = _materialize(out, it, checkpoint_every)
+    with _loop_confs(df.sparkSession, adaptive, shuffle_partitions), \
+            _generations() as held:
+        for _ in range(num_iterations):
+            out = body(stream._new(df), IterationStateHandle(state)) \
+                .df.localCheckpoint(eager=False)
+            held.append(out)
             state = state_update(state, out)
-            # materialize BEFORE releasing the previous round (renoir's
-            # leader barrier, leader.rs:26-100): unpersisting a parent of
-            # a lazy cache would silently rebuild the whole chain later
-            out.count()
-            if prev_cached is not None:
-                _release_round(prev_cached, stale)
-            prev_cached = out
+            out.count()  # round barrier: out is materialized, df is dead
+            _free_all_but(held, out)
             df = out
             if loop_condition is not None and not loop_condition(state):
                 break
-    # cut the returned lineage (see delta_iterate): analysis of the
-    # final plan otherwise replays every round's logical history, and a
-    # cache eviction would recompute the whole chain; once the checkpoint
-    # holds the data every intermediate (incl. deferred checkpoint
-    # blocks) is unreachable and freed for real
-    if df is not stream.df:
-        final = df.localCheckpoint(eager=True)
-        if prev_cached is not None:
-            stale.append(prev_cached)
-        for d in stale:
-            free_local_checkpoint(d)
-        df = final
     return state, stream._new(df)
 
 
@@ -178,7 +172,6 @@ def replay(
     state_update: Callable[[object, DataFrame], object],
     loop_condition: Optional[Callable[[object], bool]] = None,
     *,
-    checkpoint_every: int = 4,
     adaptive: Optional[bool] = False,
     shuffle_partitions: Optional[int] = None,
 ):
@@ -193,26 +186,22 @@ def replay(
     cached_in = stream.df.persist()
     replay_stream = stream._new(cached_in)
     state = initial_state
-    prev: Optional[DataFrame] = None
-    stale: list = []
-    with _loop_confs(cached_in.sparkSession, adaptive, shuffle_partitions):
-        for it in range(num_iterations):
-            out = body(replay_stream, IterationStateHandle(state)).df
-            out = _materialize(out, it, checkpoint_every)
-            state = state_update(state, out)
-            out.count()  # round barrier — see iterate()
-            if prev is not None:
-                _release_round(prev, stale)
-            prev = out
-            if loop_condition is not None and not loop_condition(state):
-                break
-    # replay returns only the driver-side state: every per-round frame
-    # (including deferred checkpoint blocks) is dead here
-    if prev is not None:
-        stale.append(prev)
-    for d in stale:
-        free_local_checkpoint(d)
-    cached_in.unpersist()
+    try:
+        with _loop_confs(cached_in.sparkSession, adaptive,
+                         shuffle_partitions), _generations() as held:
+            for _ in range(num_iterations):
+                out = body(replay_stream, IterationStateHandle(state)) \
+                    .df.localCheckpoint(eager=False)
+                held.append(out)
+                state = state_update(state, out)
+                out.count()  # round barrier — see iterate()
+                _free_all_but(held, out)
+                if loop_condition is not None and not loop_condition(state):
+                    break
+            # replay returns only the driver-side state
+            _free_all_but(held)
+    finally:
+        cached_in.unpersist()
     return state
 
 
@@ -222,7 +211,6 @@ def delta_iterate(
     body: Callable,
     merge: Optional[Callable] = None,
     *,
-    checkpoint_every: int = 4,
     adaptive: Optional[bool] = False,
     shuffle_partitions: Optional[int] = None,
 ):
@@ -246,7 +234,10 @@ def delta_iterate(
 
     Each round costs one shuffle for the body's aggregation plus one
     key-partitioned merge join; both sides hash-partition on the same key
-    so Spark reuses the exchange (EnsureRequirements).
+    so Spark reuses the exchange (EnsureRequirements). Its one action is
+    the delta count, which materializes the delta and the state the body
+    read; a loop that stops on ``num_iterations`` rather than on an empty
+    delta counts its last merged state once.
     """
     from .keyed import KeyedStream
 
@@ -268,53 +259,27 @@ def delta_iterate(
             return state._stream(out)
 
     state_df = keyed.df
-    # ONE action per round (the delta count — renoir's leader barrier,
-    # leader.rs:26-100): counting round r's delta executes the persisted
-    # state_{r-1} plan and thereby populates its cache, so generation
-    # r-2 (state and delta) can be released AFTER that barrier instead
-    # of paying a second materializing count per round.
-    prev_state: Optional[DataFrame] = None
-    prev_delta: Optional[DataFrame] = None
-    stale: list = []
-    with _loop_confs(state_df.sparkSession, adaptive, shuffle_partitions):
+    with _loop_confs(state_df.sparkSession, adaptive, shuffle_partitions), \
+            _generations() as held:
         for it in range(num_iterations):
-            state_ks = KeyedStream(keyed.ctx, state_df, keys)
-            delta_df = body(state_ks, it).df.persist()
-            n_delta = delta_df.count()  # leader barrier
-            if prev_state is not None:
-                _release_round(prev_state, stale)
-                prev_state = None
-            if prev_delta is not None:
-                prev_delta.unpersist()  # deltas are always persists
-                prev_delta = None
+            delta_df = body(KeyedStream(keyed.ctx, state_df, keys), it) \
+                .df.localCheckpoint(eager=False)
+            held.append(delta_df)
+            # leader barrier (leader.rs:26-100): materializes the delta and
+            # the state it was computed from, so the previous generation
+            # (the state and delta that merged into state_df) is dead
+            n_delta = delta_df.count()
+            _free_all_but(held, state_df, delta_df)
             if n_delta == 0:
-                delta_df.unpersist()
+                _free_all_but(held, state_df)
                 break
-            new_state = merge(
+            state_df = merge(
                 KeyedStream(keyed.ctx, state_df, keys),
                 KeyedStream(keyed.ctx, delta_df, keys),
-            ).df
-            new_state = _materialize(new_state, it, checkpoint_every)
-            if it > 0:
-                prev_state = state_df
-            prev_delta = delta_df
-            state_df = new_state
-    # cut the returned lineage: each round's merge references the prior
-    # state TWICE (body + merge), so the logical plan doubles per round
-    # between checkpoints — execution is cache-saved, but ANALYSIS of the
-    # final plan is exponential in rounds-since-checkpoint (measured: the
-    # q83 component loop compiled to a 1000-exchange plan string). The
-    # eager checkpoint re-reads the already-persisted state once and
-    # hands callers an O(1) plan that also survives cache eviction.
-    if state_df is not keyed.df:
-        final = state_df.localCheckpoint(eager=True)
-        # the checkpoint copied the data, so the loop's last relations —
-        # and every deferred checkpoint generation — are unreachable
-        # through the returned stream; free them for real
-        for d in (state_df, prev_state, prev_delta):
-            if d is not None:
-                stale.append(d)
-        for d in stale:
-            free_local_checkpoint(d)
-        state_df = final
+            ).df.localCheckpoint(eager=False)
+            held.append(state_df)
+        else:
+            if num_iterations > 0:  # stopped with deltas still flowing
+                state_df.count()
+                _free_all_but(held, state_df)
     return KeyedStream(keyed.ctx, state_df, keys)

@@ -301,15 +301,14 @@ class KeyedStream:
 
     def delta_iterate(self, num_iterations: int, body: Callable,
                       merge: Optional[Callable] = None,
-                      *, checkpoint_every: int = 4, **loop_confs) -> "KeyedStream":
+                      **loop_confs) -> "KeyedStream":
         """Keyed incremental iteration — renoir ``delta_iterate``
         (src/operator/iteration/iterate_delta.rs:104-140). Pregel-style
         driver loop; see iteration.py for the full contract
         (``adaptive`` / ``shuffle_partitions`` loop tuning included)."""
         from .iteration import delta_iterate as _delta
 
-        return _delta(self, num_iterations, body, merge,
-                      checkpoint_every=checkpoint_every, **loop_confs)
+        return _delta(self, num_iterations, body, merge, **loop_confs)
 
     # ------------------------------------------------------------------ #
     # keyed join (SURVEY.md §2.6) and windows (§2.8)

@@ -979,7 +979,7 @@ class Stream:
 
     def iterate(self, num_iterations: int, initial_state, body: Callable,
                 state_update: Callable, loop_condition: Optional[Callable] = None,
-                *, checkpoint_every: int = 4, **loop_confs):
+                **loop_confs):
         """Feedback loop — renoir ``iterate``
         (src/operator/iteration/iterate.rs:306-439). Returns
         ``(final_state, last_iteration_stream)``; see iteration.py
@@ -987,20 +987,18 @@ class Stream:
         from .iteration import iterate as _iterate
 
         return _iterate(self, num_iterations, initial_state, body,
-                        state_update, loop_condition,
-                        checkpoint_every=checkpoint_every, **loop_confs)
+                        state_update, loop_condition, **loop_confs)
 
     def replay(self, num_iterations: int, initial_state, body: Callable,
                state_update: Callable, loop_condition: Optional[Callable] = None,
-               *, checkpoint_every: int = 4, **loop_confs):
+               **loop_confs):
         """Replay loop — renoir ``replay``
         (src/operator/iteration/replay.rs:256-300). Returns the final
         state; the input is cached and re-fed every iteration."""
         from .iteration import replay as _replay
 
         return _replay(self, num_iterations, initial_state, body,
-                       state_update, loop_condition,
-                       checkpoint_every=checkpoint_every, **loop_confs)
+                       state_update, loop_condition, **loop_confs)
 
     # ------------------------------------------------------------------ #
     # sort / limit / top-k (SURVEY.md §2.7)

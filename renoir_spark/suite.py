@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .context import StreamContext
+from .iteration import loop_partitions
+from .util import count_rows
 from .window import (
     AllWindow,
     CountWindow,
@@ -50,6 +52,19 @@ def _t(ctx: StreamContext, sf_dir: str, name: str):
     return s
 
 
+def _money(*cols: str):
+    """Money columns as the TPC-H decimal(15,2). A sum of their products
+    is exact, so the rounded cent cannot depend on the order the engine
+    adds in (a double sum on a .xx5 boundary rounds either way); the
+    oracles cast the same way."""
+    return [F.col(c).cast("decimal(15,2)") for c in cols]
+
+
+def _round_money(total):
+    """An exact decimal money sum rounded to cents, as a double."""
+    return F.round(total, 2).cast("double")
+
+
 # --------------------------------------------------------------------- #
 # relational core (M0-M2)
 # --------------------------------------------------------------------- #
@@ -58,6 +73,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship (TPC-H Q1 shape): filter → group_by → multi-agg fold.
     Operators: stream_parquet, filter, group_by, fold (SURVEY §2.1/2.3/2.5)."""
     ctx = _ctx(spark)
+    price, disc, tax = _money("l_extendedprice", "l_discount", "l_tax")
     return (
         _t(ctx, sf_dir, "lineitem")
         .filter("l_shipdate <= timestamp'1998-09-02 00:00:00'")
@@ -65,10 +81,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .fold(
             sum_qty=F.round(F.sum("l_quantity"), 2),
             sum_base_price=F.round(F.sum("l_extendedprice"), 2),
-            sum_disc_price=F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2),
-            sum_charge=F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
-            ),
+            sum_disc_price=_round_money(F.sum(price * (1 - disc))),
+            sum_charge=_round_money(F.sum(price * (1 - disc) * (1 + tax))),
             avg_qty=F.round(F.avg("l_quantity"), 6),
             avg_price=F.round(F.avg("l_extendedprice"), 6),
             avg_disc=F.round(F.avg("l_discount"), 6),
@@ -82,8 +96,13 @@ ORACLE_Q01 = """
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 2)                                        AS sum_qty,
        round(sum(l_extendedprice), 2)                                   AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE)                                                  AS sum_disc_price,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))
+                      * (1 + CAST(l_tax AS DECIMAL(15,2)))), 2)
+            AS DOUBLE)                                                  AS sum_charge,
        round(avg(l_quantity), 6)                                        AS avg_qty,
        round(avg(l_extendedprice), 6)                                   AS avg_price,
        round(avg(l_discount), 6)                                        AS avg_disc,
@@ -123,16 +142,12 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(ctx, sf_dir, "lineitem").filter(
         "l_shipdate > timestamp'1996-03-15 00:00:00'"
     )
-    # money as the TPC-H decimal(15,2): the sum is exact, so the rounded
-    # cent cannot depend on the order the engine adds in (a double sum on
-    # a .xx5 boundary rounds either way); the oracle does the same
-    price = F.col("l_extendedprice").cast("decimal(15,2)")
-    disc = F.col("l_discount").cast("decimal(15,2)")
+    price, disc = _money("l_extendedprice", "l_discount")
     return (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .group_by("o_orderkey")
-        .fold(revenue=F.round(F.sum(price * (1 - disc)), 2).cast("double"))
+        .fold(revenue=_round_money(F.sum(price * (1 - disc))))
         .sorted_limit_by([F.col("revenue").desc(), F.col("o_orderkey")], 10)
         .df
     )
@@ -184,19 +199,22 @@ def q05_broadcast_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = _t(ctx, sf_dir, "supplier")
     nat = _t(ctx, sf_dir, "nation")
     reg = _t(ctx, sf_dir, "region")
+    price, disc = _money("l_extendedprice", "l_discount")
     return (
         li.join_with(sup, "l_suppkey", "s_suppkey").ship_broadcast_right().inner()
         .join_with(nat, "s_nationkey", "n_nationkey").ship_broadcast_right().inner()
         .join_with(reg, "n_regionkey", "r_regionkey").ship_broadcast_right().inner()
         .group_by("r_name", "n_name")
-        .fold(revenue=F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2))
+        .fold(revenue=_round_money(F.sum(price * (1 - disc))))
         .df
     )
 
 
 ORACLE_Q05 = """
 SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE) AS revenue
 FROM lineitem, supplier, nation, region
 WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
   AND n_regionkey = r_regionkey
@@ -208,6 +226,7 @@ def q06_revenue_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global terminal fold (TPC-H Q6 shape) — renoir ``fold_assoc``
     (src/operator/mod.rs:771-780): pushdown-friendly filters + single-row agg."""
     ctx = _ctx(spark)
+    price, disc = _money("l_extendedprice", "l_discount")
     return (
         _t(ctx, sf_dir, "lineitem")
         .filter(
@@ -215,13 +234,15 @@ def q06_revenue_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_shipdate < timestamp'1997-01-01 00:00:00' AND "
             "l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"
         )
-        .fold(revenue=F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2))
+        .fold(revenue=_round_money(F.sum(price * disc)))
         .df
     )
 
 
 ORACLE_Q06 = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
+SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * CAST(l_discount AS DECIMAL(15,2))), 2)
+            AS DOUBLE) AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
@@ -755,6 +776,7 @@ def q25_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = _ctx(spark)
     verts, edges = _graph(ctx, sf_dir)
     edges = edges.persist()
+    n_edges = count_rows(edges)
 
     init = ctx.from_df(verts.withColumn("comp", F.col("v"))).key_by("v")
 
@@ -773,13 +795,13 @@ def q25_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ctx.from_df(delta)
 
-    # shallow convergence (graph diameter 3) → no mid-loop checkpoint.
-    # edges stays persisted until the plan is dropped (unpersisting here,
-    # before the caller's action, would force per-round recomputation).
-    # loop shuffles sized to the ~15k-row state, not the session default
-    # (at larger SF pass state_bytes / target_partition_size instead)
-    final = init.delta_iterate(20, body, checkpoint_every=8,
-                               shuffle_partitions=8)
+    # loop shuffles sized to the edge volume, not the session default
+    final = init.delta_iterate(
+        20, body, shuffle_partitions=loop_partitions(spark, n_edges)
+    )
+    # the returned state is a materialized checkpoint: nothing reads the
+    # edge cache any more, so release it instead of leaking it
+    edges.unpersist()
     return final.df.select("v", "comp")
 
 
@@ -839,7 +861,9 @@ def q26_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _state, ranks = init.iterate(3, 0, body, lambda st, _df: st + 1,
                                  shuffle_partitions=8)
-    # ew/verts stay persisted until the plan is dropped (see q25 note)
+    # ranks is a materialized checkpoint (see q25)
+    ew.unpersist()
+    verts.unpersist()
     return ranks.df.select("v", F.round("r", 9).alias("rank"))
 
 
@@ -2803,11 +2827,8 @@ def q89_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("v", F.col("new_dist").alias("dist"))
         )
 
-    final = init.delta_iterate(10, body, checkpoint_every=8, shuffle_partitions=8)
-    # the final state is localCheckpointed (lineage cut inside
-    # delta_iterate), so the invariant edge cache is no longer reachable
-    # from the returned plan — release it instead of leaking the block
-    # until session end
+    final = init.delta_iterate(10, body, shuffle_partitions=8)
+    # the final state is a materialized checkpoint (see q25)
     wedges.unpersist()
     return final.df.filter(F.col("dist") < INF).select("v", "dist")
 

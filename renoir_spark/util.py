@@ -112,6 +112,14 @@ def grouped_apply_sorted(df, keys, order_cols, fn, schema):
     return part.mapInPandas(_proc, schema)
 
 
+def count_rows(df) -> int:
+    """``df.count()`` in one Spark job. Catalyst's count adds a shuffle,
+    so under AQE a not-yet-materialized cache counts in three jobs (the
+    cache stage, the partial count, the final count); counting the
+    plan's row RDD runs one job and fills the cache on the way."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def tiny_df(spark, rows, schema):
     """ONE-partition DataFrame for metadata-sized row lists (index
     meta/grid/cells relations, empty hive-root resets).
@@ -264,10 +272,12 @@ def read_parquet(spark, *paths):
     df = spark.read.parquet(*paths)
     if key is not None:
         with _schema_lock:
-            _schema_cache[key] = df.schema
-            _schema_cache.move_to_end(key)
-            while len(_schema_cache) > _SCHEMA_CACHE_MAX:
+            # evict before inserting, so the cache never holds more than
+            # its cap, even for a reader that looks without the lock
+            _schema_cache.pop(key, None)
+            while len(_schema_cache) >= _SCHEMA_CACHE_MAX:
                 _schema_cache.popitem(last=False)
+            _schema_cache[key] = df.schema
     return df
 
 

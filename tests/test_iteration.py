@@ -2,6 +2,7 @@
 reference's doctests and examples (iterate.rs doctest, replay.rs doctest,
 connected_components.rs, kmeans.rs)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -111,3 +112,146 @@ def test_delta_iterate_chain_components(ctx):
     final = init.delta_iterate(50, body)
     got = {r.v: r.comp for r in final.df.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10}
+
+
+# ------------------------------------------------------------------ #
+# round cost and storage: one lazy checkpoint per round
+# ------------------------------------------------------------------ #
+
+def _rdd_block_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _path_components(ctx, k):
+    """Path graph 0-1-...-k: min-label propagation needs exactly k
+    rounds with deltas, then one empty round."""
+    e0 = [(i, i + 1) for i in range(k)]
+    edges = ctx.stream_iter(
+        e0 + [(b, a) for a, b in e0], "src long, dst long"
+    ).df
+    init = ctx.stream_iter(
+        [(v, v) for v in range(k + 1)], "v long, comp long"
+    ).key_by("v")
+
+    def body(state, _it):
+        cand = (
+            state.df.join(edges, state.df["v"] == edges["src"])
+            .groupBy(F.col("dst").alias("v"))
+            .agg(F.min("comp").alias("new_comp"))
+        )
+        return state._stream(
+            cand.join(state.df, "v")
+            .filter(F.col("new_comp") < F.col("comp"))
+            .select("v", F.col("new_comp").alias("comp"))
+        )
+
+    return init, body
+
+
+def test_delta_iterate_runs_one_job_per_round(ctx, spark):
+    """k delta rounds plus the empty round: k + 1 jobs, the delta counts.
+    Every round's state is a checkpoint leaf, materialized by the next
+    round's count, and the loop ends on no trailing checkpoint job."""
+    from renoir_spark.util import free_local_checkpoint, is_local_checkpoint
+
+    k = 5
+    init, body = _path_components(ctx, k)
+    leaf = []
+
+    def traced(state, it):
+        leaf.append(is_local_checkpoint(state.df))
+        return body(state, it)
+
+    sc = spark.sparkContext
+    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    sc.setJobGroup("delta_rounds", "delta_rounds")
+    try:
+        final = init.delta_iterate(50, traced)
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("delta_rounds")) == k + 1
+    assert len(leaf) == k + 1 and all(leaf[1:]), leaf
+    assert {r.comp for r in final.df.collect()} == {0}
+    free_local_checkpoint(final.df, blocking=True)
+
+
+class _Boom(RuntimeError):
+    pass
+
+
+def _run_failing_loop(ctx, loop, part):
+    """Run ``loop`` with ``part`` (its body, merge or state_update)
+    raising on its third call, i.e. in round 3."""
+    calls = []
+
+    def hit(name):
+        if name == part:
+            calls.append(1)
+            if len(calls) == 3:
+                raise _Boom("injected in round 3")
+
+    if loop == "delta_iterate":
+        init, body = _path_components(ctx, 8)
+
+        def failing_body(state, it):
+            hit("body")
+            return body(state, it)
+
+        def merge(state, delta):
+            hit("merge")
+            return state._stream(
+                state.df.join(
+                    delta.df.withColumnRenamed("comp", "d"), "v", "left"
+                ).select("v", F.coalesce("d", "comp").alias("comp"))
+            )
+
+        init.delta_iterate(20, failing_body, merge)
+        return
+
+    def step(st, _h):
+        hit("body")
+        return st.map(x=F.col("x") + 1.0)
+
+    def update(acc, df):
+        hit("state_update")
+        return acc + df.agg(F.sum("x")).collect()[0][0]
+
+    s = ctx.stream_iter([(float(i),) for i in range(50)], "x double")
+    getattr(s, loop)(9, 0.0, step, update)
+
+
+@pytest.mark.parametrize("loop, part", [
+    ("iterate", "body"), ("iterate", "state_update"), ("replay", "body"),
+    ("replay", "state_update"), ("delta_iterate", "body"),
+    ("delta_iterate", "merge"),
+])
+def test_loop_frees_every_generation_when_a_round_raises(ctx, spark, loop,
+                                                          part):
+    spark.catalog.clearCache()
+    base = _rdd_block_ids(spark)
+    with pytest.raises(_Boom):
+        _run_failing_loop(ctx, loop, part)
+    assert not _rdd_block_ids(spark) - base
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize(
+    "name", ["q25_connected_components", "q26_pagerank", "q89_sssp"]
+)
+def test_graph_queries_release_their_side_input_caches(spark, sf_dir, name):
+    """The loop's result is a checkpoint, so no later action reads the
+    invariant edge caches: the query must leave the CacheManager as it
+    found it (a kept entry would also serve stale rows to a later call on
+    rewritten files at the same path)."""
+    from renoir_spark import suite
+
+    spark.catalog.clearCache()
+    assert suite.QUERIES[name](spark, sf_dir).count() > 0
+    assert _cache_is_empty(spark)

@@ -71,11 +71,10 @@ def test_iterate_releases_all_blocks(ctx, spark):
     base = set(_rdd_block_ids(spark))
     s = ctx.stream_iter([(float(i),) for i in range(100)], "x double")
     state, out = s.iterate(
-        9,  # > 2 checkpoint generations at checkpoint_every=4
+        9,
         0.0,
         lambda st, _h: st.map(x=F.col("x") * 0.5),
         lambda acc, df: acc + df.agg(F.sum("x")).collect()[0][0],
-        checkpoint_every=4,
     )
     rows = out.collect_vec()
     assert len(rows) == 100
@@ -97,7 +96,6 @@ def test_replay_releases_all_blocks(ctx, spark):
         0.0,
         lambda st, h: st.map(x=F.col("x") + 1.0),
         lambda acc, df: acc + df.agg(F.sum("x")).collect()[0][0],
-        checkpoint_every=4,
     )
     assert state > 0
     # replay returns only driver state: nothing may stay cached
@@ -118,7 +116,7 @@ def test_delta_iterate_releases_all_blocks(ctx, spark):
             )
         )
 
-    out = s.delta_iterate(12, body, checkpoint_every=4)
+    out = s.delta_iterate(12, body)
     assert out.df.count() == 10
     leaked = set(_rdd_block_ids(spark)) - base
     assert len(leaked) <= 1, leaked  # the returned final checkpoint
