@@ -13,7 +13,7 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from .stream import Stream
-from .util import read_parquet
+from .util import drop_spark_zip_finders, read_parquet
 
 _DEFAULT_CONF = {
     # Catalyst/AQE do the physical planning renoir leaves to the user
@@ -119,9 +119,12 @@ class StreamContext:
             return self.stream_range(gen, partitions=partitions)
         n_part = partitions or self.spark.sparkContext.defaultParallelism
         rdd = self.spark.sparkContext.parallelize(range(n_part), n_part)
-        rows = rdd.mapPartitionsWithIndex(
-            lambda pid, _it, _g=gen, _n=n_part: _g(pid, _n)
-        )
+
+        def _replica(pid, _it):
+            drop_spark_zip_finders()
+            return gen(pid, n_part)
+
+        rows = rdd.mapPartitionsWithIndex(_replica)
         return Stream(self, self.spark.createDataFrame(rows, schema=schema))
 
     def stream_file(self, path: str) -> Stream:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .iteration import loop_partitions
-from .util import count_rows, to_col
+from .util import count_rows, drop_spark_zip_finders, to_col
 
 # --------------------------------------------------------------------- #
 # shared deterministic hashing / text normalization
@@ -415,6 +415,7 @@ def dedup_against_bloom(
 
     @F.pandas_udf("boolean")
     def _bloom_hit(keys):
+        drop_spark_zip_finders()
         h = keys.to_numpy(dtype=np.int64).view(np.uint64)
         arr = bbits.value
         hit = np.ones(len(h), dtype=bool)
@@ -3074,6 +3075,7 @@ def approx_distinct_kmv(stream, col, *, k: int = 256, alias: str = "approx_disti
     two60 = float(1 << 60)
 
     def _local_kmv(batches):
+        drop_spark_zip_finders()
         import numpy as np
         import pandas as pd
 
@@ -3162,6 +3164,7 @@ def heavy_hitters(stream, key_col, k: int, *, capacity: Optional[int] = None,
     )
 
     def _mg(batches):
+        drop_spark_zip_finders()
         import pandas as pd
         from pyspark import TaskContext
 
@@ -3362,6 +3365,7 @@ def _ivf_assign(df, units, *, vec_col_in: str = "cvec", id_schema: str = "id lon
     rounded dot against unit centroids, ties → lowest cell) without any
     join or shuffle. ``df`` must carry exactly (id, ``vec_col_in``)."""
     def _assign_cells(batches):
+        drop_spark_zip_finders()
         import numpy as np
 
         UT = np.array(units, dtype=np.float64).T  # dim × n_cells
@@ -3546,6 +3550,7 @@ def ann_cosine_lsh(
             # along the dim axis reproduces the _dot sequential fold
             # bit-exactly (same trick as IVF assignment, _dots_block) —
             # per-row HOF dots measured ~6 s of the q64 wall time
+            drop_spark_zip_finders()
             import numpy as np
 
             Pm = np.array(all_planes, dtype=np.float64).T  # (dim, L*np)
@@ -3796,6 +3801,7 @@ def _ivf_probe(qdf, units, *, nprobe: int, out_schema: str):
     ``qdf`` must carry exactly (qid, qvec)."""
 
     def _probe_cells(batches):
+        drop_spark_zip_finders()
         import numpy as np
         import pandas as pd
 
@@ -4529,6 +4535,7 @@ def _kmv_bottomk_df(df, text_col: str, shingle_n: int, k: int):
     fraction) pay the numpy merge."""
 
     def _local(batches):
+        drop_spark_zip_finders()
         import numpy as np
         import pandas as pd
 

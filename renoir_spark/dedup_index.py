@@ -324,31 +324,40 @@ class DedupIndex:
         id_col = self.meta["id_col"]
         text_col = self.meta["text_col"]
         nd = self.meta["bucket_dirs"]
+        # EAGER checkpoint, not persist: after each write Spark re-caches
+        # every cached plan that reads the written path. The handshake
+        # frame reads ``buckets`` through the candidate join, so a
+        # persisted sig would be dropped by the first write and the
+        # second write would recompute the whole pairs plan — against
+        # the half-updated index. Checkpoint blocks sit outside the
+        # CacheManager, so both writes read the same survivor rows.
         sig = _sig_for_append(
             self, batch,
             lambda: _batch_sig(batch, text_col, id_col, self.meta),
-        ).persist()
-        # repartition ON the hive key before the partitioned write: an
-        # unclustered write makes every task open a file in every
-        # directory (measured 1,600+ tiny files at sf0.1 — a listing
-        # and open-cost tax on every later probe). One posting-row
-        # shuffle buys ~one file per directory per append; at corpus
-        # scale cap file size with spark.sql.files.maxRecordsPerFile
-        # rather than more tasks.
-        _bucket_rows(sig, self.meta).select(
-            "bidx", "bhash", F.col("__id").alias("id"), "__bk"
-        ).repartition(nd, "__bk").write.mode("append").partitionBy(
-            "__bk"
-        ).parquet(f"{self.path}/buckets")
-        sig.select(
-            F.col("__id").alias("id"),
-            F.col("__sh").alias("sh"),
-            (md5_int31(F.col("__id").cast("string"))
-             % F.lit(nd)).alias("__sk"),
-        ).repartition(nd, "__sk").write.mode("append").partitionBy(
-            "__sk"
-        ).parquet(f"{self.path}/shingles")
-        sig.unpersist()
+        ).localCheckpoint(eager=True)
+        try:
+            # repartition ON the hive key before the partitioned write:
+            # an unclustered write makes every task open a file in
+            # every directory (measured 1,600+ tiny files at sf0.1 — a
+            # listing and open-cost tax on every later probe). One
+            # posting-row shuffle buys ~one file per directory per
+            # append; at corpus scale cap file size with
+            # spark.sql.files.maxRecordsPerFile rather than more tasks.
+            _bucket_rows(sig, self.meta).select(
+                "bidx", "bhash", F.col("__id").alias("id"), "__bk"
+            ).repartition(nd, "__bk").write.mode("append").partitionBy(
+                "__bk"
+            ).parquet(f"{self.path}/buckets")
+            sig.select(
+                F.col("__id").alias("id"),
+                F.col("__sh").alias("sh"),
+                (md5_int31(F.col("__id").cast("string"))
+                 % F.lit(nd)).alias("__sk"),
+            ).repartition(nd, "__sk").write.mode("append").partitionBy(
+                "__sk"
+            ).parquet(f"{self.path}/shingles")
+        finally:
+            free_local_checkpoint(sig)
 
     def delete_batch(self, ids) -> None:
         """TAKEDOWN support — remove indexed docs by id (the ingest-

@@ -17,7 +17,10 @@ rule for every round's output (the ``iterate``/``replay`` round output, the
   loop's history (without the cut the plan doubles per round);
 - the round's ONE driver action (the delta count, or the output count)
   is the barrier that materializes it, mirroring renoir's leader barrier
-  (src/operator/iteration/leader.rs:26-100) — no extra job;
+  (src/operator/iteration/leader.rs:26-100) — no extra job. ``replay``
+  has no barrier: no round reads another's output, so its
+  ``state_update`` is the round's only reader and its own actions
+  materialize the output;
 - once the barrier has materialized a frame's successor, the frame is
   freed with ``util.free_local_checkpoint``: at most two generations are
   alive, and the returned frame is the last materialized checkpoint;
@@ -194,12 +197,12 @@ def replay(
                     .df.localCheckpoint(eager=False)
                 held.append(out)
                 state = state_update(state, out)
-                out.count()  # round barrier — see iterate()
-                _free_all_but(held, out)
+                # no barrier job: only state_update reads a round's
+                # output (its own action materializes it), and replay
+                # returns only the driver-side state
+                _free_all_but(held)
                 if loop_condition is not None and not loop_condition(state):
                     break
-            # replay returns only the driver-side state
-            _free_all_but(held)
     finally:
         cached_in.unpersist()
     return state

@@ -8,13 +8,15 @@ a keyed operator needs co-location (EnsureRequirements, SURVEY.md §4).
 
 from __future__ import annotations
 
+import functools
+import inspect
 from typing import TYPE_CHECKING, Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import named_cols, to_col, to_cols
+from .util import drop_spark_zip_finders, named_cols, to_col, to_cols
 
 if TYPE_CHECKING:  # pragma: no cover
     from .context import StreamContext
@@ -85,9 +87,24 @@ class KeyedStream:
 
     def fold_py(self, fn: Callable, schema) -> "Stream":
         """Arbitrary-closure keyed fold via Arrow grouped-map
-        (``applyInPandas``): ``fn(key_tuple, pandas.DataFrame) -> pdf``.
+        (``applyInPandas``): ``fn(key_tuple, pandas.DataFrame) -> pdf``,
+        or ``fn(pandas.DataFrame) -> pdf`` (Spark tells the two forms
+        apart by ``getfullargspec``; type hints, e.g. the iterator form,
+        carry over through ``functools.wraps``).
         The escape hatch for renoir fold closures no expression can state."""
-        return self._stream(self.df.groupBy(*self.keys).applyInPandas(fn, schema))
+        n_args = len(inspect.getfullargspec(fn).args)
+        if n_args not in (1, 2):
+            raise ValueError(
+                "fold_py: fn must take (data) or (key, data), "
+                f"got {n_args} positional parameters"
+            )
+
+        @functools.wraps(fn)
+        def _fold(key, pdf):
+            drop_spark_zip_finders()
+            return fn(pdf) if n_args == 1 else fn(key, pdf)
+
+        return self._stream(self.df.groupBy(*self.keys).applyInPandas(_fold, schema))
 
     def sum(self, value, alias: str = "sum") -> "Stream":
         """renoir ``group_by_sum`` (src/operator/mod.rs:1467-1498)."""

@@ -30,6 +30,8 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import drop_spark_zip_finders
+
 IMAGE_SCHEMA = (
     "width int, height int, channels int, format string, features array<float>"
 )
@@ -268,6 +270,7 @@ def decode_image(stream, content_col: str = "content", out_col: str = "image",
     codec = _bind_n_features(get_codec("image"), n_features)  # plan-build
 
     def _batches(batches: Iterator) -> Iterator:
+        drop_spark_zip_finders()
         for pdf in batches:
             decoded = [codec(bytes(b)) for b in pdf[content_col]]
             out = pdf[out_names].copy() if columns is not None else pdf
@@ -291,6 +294,7 @@ def decode_audio(stream, content_col: str = "content", out_col: str = "audio"):
     codec = get_codec("audio")  # captured at plan-build time
 
     def _batches(batches: Iterator) -> Iterator:
+        drop_spark_zip_finders()
         for pdf in batches:
             decoded = [codec(bytes(b)) for b in pdf[content_col]]
             for k in ("sample_rate", "n_samples", "duration_s", "features"):
@@ -326,6 +330,7 @@ def decode_media(stream, content_col: str = "content", *, image: bool = True,
     aud_codec = get_codec("audio") if audio else None
 
     def _batches(batches: Iterator) -> Iterator:
+        drop_spark_zip_finders()
         for pdf in batches:
             blobs = [bytes(b) for b in pdf[content_col]]
             if image:
@@ -398,6 +403,7 @@ def sample_frames(stream, content_col: str = "content", *, num_frames: int = 4,
             pass
 
     def _batches(batches: Iterator) -> Iterator:
+        drop_spark_zip_finders()
         import numpy as np
 
         for pdf in batches:
@@ -440,6 +446,7 @@ def embed_text(stream, text_col: str = "caption",
     codec = _bind_n_features(get_codec("text_embed"), n_features)
 
     def _batches(batches: Iterator) -> Iterator:
+        drop_spark_zip_finders()
         for pdf in batches:
             pdf[out_col] = [
                 None if t is None else codec(str(t))

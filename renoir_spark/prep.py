@@ -38,7 +38,7 @@ from .datapipe import (
     sql_tokens,
     tokens,
 )
-from .util import free_local_checkpoint, to_col
+from .util import drop_spark_zip_finders, free_local_checkpoint, to_col
 
 # --------------------------------------------------------------------- #
 # PII redaction
@@ -2829,6 +2829,7 @@ def bpe_segment(stream, text_col: str, merge_rows: Sequence, *,
         return syms
 
     def _apply(batches):
+        drop_spark_zip_finders()
         import pandas as pd
 
         rk = bc.value

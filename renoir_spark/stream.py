@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import named_cols, to_col, to_cols, ts_micros
+from .util import drop_spark_zip_finders, named_cols, to_col, to_cols, ts_micros
 
 if TYPE_CHECKING:  # pragma: no cover
     from .context import StreamContext
@@ -85,6 +85,7 @@ def _fold_py_partials(df: DataFrame, init, local_fn: Callable) -> DataFrame:
     mk = Row(*cols)
 
     def _partial(batches):
+        drop_spark_zip_finders()
         import copy
 
         import pyarrow as pa
@@ -159,6 +160,7 @@ class Stream:
         Column expression can state (renoir closures, SURVEY.md §2.11)."""
 
         def _iter(batches):
+            drop_spark_zip_finders()
             for pdf in batches:
                 yield fn(pdf)
 
@@ -251,6 +253,7 @@ class Stream:
         schema = self.df.schema
 
         def _iter(batches):
+            drop_spark_zip_finders()
             for pdf in batches:
                 for row in pdf.to_dict("records"):
                     fn(row)
@@ -266,6 +269,7 @@ class Stream:
         (= per-partition) and cross-partition order is unspecified."""
 
         def _iter(batches):
+            drop_spark_zip_finders()
             state = make_state()
             for pdf in batches:
                 yield fn(state, pdf)
@@ -307,7 +311,12 @@ class Stream:
         End-of-iterator is the FlushAndRestart/Terminate signal.
         (Streaming watermark hooks need ``transformWithState`` — see
         streaming.py; documented divergence.)"""
-        return self._new(self.df.mapInPandas(fn, schema))
+
+        def _custom(batches):
+            drop_spark_zip_finders()
+            return fn(batches)
+
+        return self._new(self.df.mapInPandas(_custom, schema))
 
     def map_async(self, fn: Callable, schema, *, concurrency: int = 4) -> "Stream":
         """Async enrichment map — renoir ``map_async``

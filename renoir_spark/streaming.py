@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import named_cols, to_col
+from .util import drop_spark_zip_finders, named_cols, to_col
 from .window import _dur
 
 
@@ -404,6 +404,7 @@ def _bucket_state_dedup(
     )
 
     def _fn(key, pdf_iter, state):
+        drop_spark_zip_finders()
         store = _pickle.loads(bytes(state.get[0])) if state.exists else {}
         wm_us = state.getCurrentWatermarkMs() * 1000
         if wm_us > 0:
@@ -882,6 +883,7 @@ def keyed_map_with_state(
     """
 
     def _wrap(key, pdf_iter, state):
+        drop_spark_zip_finders()
         import pandas as pd
 
         cur = state.get if state.exists else None
@@ -947,6 +949,7 @@ def heavy_hitters_stream(
     )
 
     def _upd(key, pdf_iter, state):
+        drop_spark_zip_finders()
         import pandas as pd
 
         if state.exists:
@@ -1163,6 +1166,7 @@ def transaction_window_stream(
         return v
 
     def _fn(key, pdf_iter, state):
+        drop_spark_zip_finders()
         st = (
             _json.loads(state.get[0])
             if state.exists

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 import stat
+import sys
 import threading
+import zipimport
 from collections import OrderedDict
 from urllib.parse import urlsplit
 
@@ -76,6 +78,7 @@ def grouped_apply_sorted(df, keys, order_cols, fn, schema):
     key_list = list(keys)
 
     def _proc(batches):
+        drop_spark_zip_finders()
         import numpy as np
         import pandas as pd
 
@@ -110,6 +113,42 @@ def grouped_apply_sorted(df, keys, order_cols, fn, schema):
                 yield out
 
     return part.mapInPandas(_proc, schema)
+
+
+def drop_spark_zip_finders() -> None:
+    """Drop the cached finders of Spark's own archives from
+    ``sys.path_importer_cache``: every ``zipimporter`` whose archive is
+    ``pyspark.zip``, a ``py4j-*.zip`` or a ``.jar``.
+
+    Why: Spark's Python worker calls ``importlib.invalidate_caches()``
+    at the start of every task, and on CPython 3.11 each cached
+    ``zipimporter`` then re-reads its whole archive directory. Once a
+    worker has imported PySpark's SQL and pandas modules the cache holds
+    16 such finders over three archives (the spark-core jar alone has
+    ~5k entries), which measured 105-134 ms per task before any UDF
+    code ran. Those archives never change while a worker runs, so
+    dropping their finders loses nothing: the next import that needs
+    one of those paths builds a new finder from ``zipimport``'s own
+    parsed-directory cache (the documented contract of
+    ``sys.path_importer_cache``). Any other zip, such as a user's
+    ``--py-files`` archive, keeps its finder and so is still re-read.
+
+    Call it as the FIRST statement of every function the library ships
+    to a Python worker (``mapInPandas``, ``mapInArrow``,
+    ``applyInPandas``, ``applyInPandasWithState``, ``pandas_udf``,
+    RDD partition functions), inside the function itself: a generic
+    wrapper would hide the function's arity, which ``applyInPandas``
+    reads. The drop runs after the task's own ``invalidate_caches()``,
+    so it spares the NEXT task on the same (reused) worker; the first
+    task on a new worker still pays the re-read."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if not isinstance(finder, zipimport.zipimporter):
+            continue
+        name = os.path.basename(finder.archive)
+        if (name == "pyspark.zip" or name.endswith(".jar")
+                or (name.startswith("py4j-") and name.endswith(".zip"))):
+            cache.pop(path, None)
 
 
 def count_rows(df) -> int:

@@ -313,3 +313,78 @@ def test_exact_wide_probe_semijoin_matches_literal(ctx, spark, tmp_path):
     got_w = sorted(map(tuple, pairs_w.df.collect()))
     got_n = sorted(map(tuple, narrow.match_batch(batch).df.collect()))
     assert got_w == got_n and len(got_w) >= corpus.df.count()
+
+
+# ------------------------------------------------------------------ #
+# append: survivors computed once, before either write
+# ------------------------------------------------------------------ #
+
+def _ingest_increment(ctx, spark, path):
+    """An index over 40 docs plus the dedup_batch survivors (with the
+    handshake) of a 30-doc increment, already collected once."""
+    docs = spark.createDataFrame(
+        [(i, "ingest doc %d words body text extra %d" % (i % 11, i % 3))
+         for i in range(60)],
+        "doc_id long, text string",
+    )
+    ctx.from_df(docs).filter("doc_id % 3 != 0").dedup_index_build(
+        path, text_col="text", id_col="doc_id", bucket_dirs=4
+    )
+    idx = ctx.dedup_index(path)
+    inc = _docs(ctx, spark, [
+        (100 + i, "fresh increment doc %d about topic %d" % (i, i % 5))
+        for i in range(30)
+    ])
+    surv = idx.dedup_batch(inc, threshold=0.7)
+    ids = sorted(r.doc_id for r in surv.df.collect())
+    return idx, surv, ids
+
+
+def _rdd_block_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_append_computes_survivors_once(ctx, spark, tmp_path):
+    """Both writes read one eager checkpoint of the survivors' sig: the
+    append runs 7 jobs at this shape (12 when the second write
+    recomputed the pairs plan against the half-written index), and the
+    appended rows are exactly the survivors counted before it."""
+    idx, surv, ids = _ingest_increment(ctx, spark, str(tmp_path / "idx"))
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_append", "dedup_append")
+    try:
+        idx.append(surv)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("dedup_append")) <= 7
+    new_sh = idx._shingles_read().filter("id >= 100")
+    new_bk = idx._buckets_read().filter("id >= 100")
+    assert sorted(r.id for r in new_sh.collect()) == ids
+    assert {r.id for r in new_bk.collect()} == set(ids)
+    assert new_bk.count() == len(ids) * idx.meta["bands"]
+    surv.unpersist()
+
+
+def test_append_write_failure_leaves_no_blocks(ctx, spark, tmp_path,
+                                               monkeypatch):
+    """The survivors' sig is released when a write raises: no checkpoint
+    block and no cache entry outlives the failed append."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    spark.catalog.clearCache()
+    idx, surv, _ids = _ingest_increment(ctx, spark, str(tmp_path / "idx"))
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **k):
+        if path.endswith("/shingles"):
+            raise RuntimeError("injected shingles write failure")
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    base = _rdd_block_ids(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.append(surv)
+    assert not _rdd_block_ids(spark) - base
+    surv.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

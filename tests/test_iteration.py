@@ -255,3 +255,22 @@ def test_graph_queries_release_their_side_input_caches(spark, sf_dir, name):
     spark.catalog.clearCache()
     assert suite.QUERIES[name](spark, sf_dir).count() > 0
     assert _cache_is_empty(spark)
+
+
+def test_replay_runs_only_the_state_update_jobs(ctx, spark):
+    """replay has no per-round barrier: with a one-job state_update, k
+    rounds run k jobs (an output count added one job per round)."""
+    from renoir_spark.util import count_rows
+
+    k = 4
+    s = ctx.stream_iter([(float(i),) for i in range(50)], "x double")
+    sc = spark.sparkContext
+    sc.setJobGroup("replay_rounds", "replay_rounds")
+    try:
+        total = s.replay(k, 0, lambda st, _h: st.map(x=F.col("x") + 1.0),
+                         lambda acc, df: acc + count_rows(df))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert total == k * 50
+    assert len(sc.statusTracker().getJobIdsForGroup("replay_rounds")) == k
