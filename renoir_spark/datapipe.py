@@ -131,15 +131,6 @@ def shingles_from(toks: Column, norm: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col, n: int = 3) -> Column:
-    """Distinct word n-gram shingles; a document shorter than n words
-    contributes its whole normalized text as the single shingle.
-
-    Convenience single-expression form for small inputs/tests; hot paths
-    must stage tokens as a column first and use :func:`shingles_from`."""
-    return shingles_from(tokens(col), norm_text(col), n)
-
-
 def sql_word_shingles(expr: str, n: int = 3) -> str:
     toks = sql_tokens(expr)
     return (
@@ -1617,7 +1608,7 @@ def dedup_phash_against(
     # body re-evaluates embedded expression trees PER ARRAY ELEMENT (no
     # CSE across higher-order functions) — with the whole phash fold
     # inlined, |refs| re-computations per row measured 20 s where the
-    # staged form is sub-second (the word_shingles trap, one layer up)
+    # staged form is sub-second (shingles_from's trap, one layer up)
     staged = stream.df.withColumn(
         "__ph", phash_expr(to_col(features_col), bits)
     )

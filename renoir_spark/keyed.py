@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import iteration
 from .util import drop_spark_zip_finders, named_cols, to_col, to_cols
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -316,16 +317,9 @@ class KeyedStream:
             grouped_apply_sorted(self.df, self.keys, cols, _apply, schema)
         )
 
-    def delta_iterate(self, num_iterations: int, body: Callable,
-                      merge: Optional[Callable] = None,
-                      **loop_confs) -> "KeyedStream":
-        """Keyed incremental iteration — renoir ``delta_iterate``
-        (src/operator/iteration/iterate_delta.rs:104-140). Pregel-style
-        driver loop; see iteration.py for the full contract
-        (``adaptive`` / ``shuffle_partitions`` loop tuning included)."""
-        from .iteration import delta_iterate as _delta
-
-        return _delta(self, num_iterations, body, merge, **loop_confs)
+    # keyed incremental iteration, bound from iteration.py (the module
+    # function takes the keyed stream first, so it binds like a method)
+    delta_iterate = iteration.delta_iterate
 
     # ------------------------------------------------------------------ #
     # keyed join (SURVEY.md §2.6) and windows (§2.8)

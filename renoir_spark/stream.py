@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import ann_index, datapipe, dedup_index, iteration, multimodal, prep
 from .util import drop_spark_zip_finders, named_cols, to_col, to_cols, ts_micros
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -986,28 +987,8 @@ class Stream:
     # iteration (SURVEY.md §2.9) — driver loops, see iteration.py
     # ------------------------------------------------------------------ #
 
-    def iterate(self, num_iterations: int, initial_state, body: Callable,
-                state_update: Callable, loop_condition: Optional[Callable] = None,
-                **loop_confs):
-        """Feedback loop — renoir ``iterate``
-        (src/operator/iteration/iterate.rs:306-439). Returns
-        ``(final_state, last_iteration_stream)``; see iteration.py
-        (``adaptive`` / ``shuffle_partitions`` loop tuning included)."""
-        from .iteration import iterate as _iterate
-
-        return _iterate(self, num_iterations, initial_state, body,
-                        state_update, loop_condition, **loop_confs)
-
-    def replay(self, num_iterations: int, initial_state, body: Callable,
-               state_update: Callable, loop_condition: Optional[Callable] = None,
-               **loop_confs):
-        """Replay loop — renoir ``replay``
-        (src/operator/iteration/replay.rs:256-300). Returns the final
-        state; the input is cached and re-fed every iteration."""
-        from .iteration import replay as _replay
-
-        return _replay(self, num_iterations, initial_state, body,
-                       state_update, loop_condition, **loop_confs)
+    iterate = iteration.iterate
+    replay = iteration.replay
 
     # ------------------------------------------------------------------ #
     # sort / limit / top-k (SURVEY.md §2.7)
@@ -1047,654 +1028,107 @@ class Stream:
         return self.sorted_by(*cols).limit(n, offset)
 
     # ------------------------------------------------------------------ #
-    # LLM-data-pipeline operators (north star; datapipe.py)
+    # operator families, bound from their modules: each module function
+    # takes the stream as its first argument, so as a class attribute it
+    # binds like a method and keeps its own signature and docstring.
     # ------------------------------------------------------------------ #
 
-    def dedup_exact(self, text_col: str, *, order: Sequence) -> "Stream":
-        """Exact content dedup (normalize → sha2 key → keep min-order row).
-        See datapipe.dedup_exact for the scale notes."""
-        from .datapipe import dedup_exact as _dd
+    # LLM-data-pipeline operators (datapipe.py)
+    dedup_exact = datapipe.dedup_exact
+    dedup_against = datapipe.dedup_against
+    dedup_against_bloom = datapipe.dedup_against_bloom
+    decontaminate_embedding = datapipe.decontaminate_embedding
+    dedup_minhash = datapipe.dedup_minhash
+    minhash_pairs = datapipe.minhash_pairs
+    dedup_cluster_minhash = datapipe.dedup_cluster_minhash
+    duplicate_span_fraction = datapipe.duplicate_span_fraction
+    longest_duplicate_span = datapipe.longest_duplicate_span
+    dedup_simhash = datapipe.dedup_simhash
+    dedup_phash = datapipe.dedup_phash
+    dedup_phash_against = datapipe.dedup_phash_against
+    similar_pairs_ngram = datapipe.similar_pairs_ngram
+    dedup_cluster_exact = datapipe.dedup_cluster_exact
+    similar_pairs_exact = datapipe.similar_pairs_exact
+    containment_pairs_exact = datapipe.containment_pairs_exact
+    diversity_sample = datapipe.diversity_sample
+    dedup_embedding = datapipe.dedup_embedding
+    dedup_embedding_ivf = datapipe.dedup_embedding_ivf
+    mine_contrastive_pairs = datapipe.mine_contrastive_pairs
+    text_stats = datapipe.text_stats
+    lang_id = datapipe.lang_id
+    token_count = datapipe.token_count
+    approx_distinct_kmv = datapipe.approx_distinct_kmv
+    heavy_hitters = datapipe.heavy_hitters
+    fingerprint_winnow = datapipe.fingerprint_winnow
+    corpus_diff = datapipe.corpus_diff
+    incremental_rebuild = datapipe.incremental_rebuild
+    corpus_overlap = datapipe.corpus_overlap
+    corpus_overlap_kmv = datapipe.corpus_overlap_kmv
+    hybrid_search = datapipe.hybrid_search
 
-        return _dd(self, text_col, order=order)
-
-    def dedup_against(self, reference: "Stream", text_col: str,
-                      ref_text_col: Optional[str] = None) -> "Stream":
-        """Cross-corpus exact dedup (decontamination): drop rows whose
-        normalized content appears in ``reference``. See
-        datapipe.dedup_against for the scale notes."""
-        from .datapipe import dedup_against as _da
-
-        return _da(self, reference, text_col, ref_text_col)
-
-    def dedup_against_bloom(self, reference: "Stream", text_col: str,
-                            ref_text_col: Optional[str] = None,
-                            **kw) -> "Stream":
-        """Decontamination via a broadcast Bloom prefilter + exact
-        confirm — bit-identical to ``dedup_against``, but the reference
-        rides to executors as a bit array (~10 bits/key) and clean rows
-        never shuffle. See datapipe.dedup_against_bloom."""
-        from .datapipe import dedup_against_bloom as _dab
-
-        return _dab(self, reference, text_col, ref_text_col, **kw)
-
-    def decontaminate_embedding(self, reference: "Stream", vec_col: str,
-                                ref_vec_col: Optional[str] = None,
-                                **kw) -> "Stream":
-        """Embedding-space decontamination: drop rows cosine-similar to
-        any reference vector (broadcast array, map-side EXISTS, zero
-        shuffles). See datapipe.decontaminate_embedding."""
-        from .datapipe import decontaminate_embedding as _de
-
-        return _de(self, reference, vec_col, ref_vec_col, **kw)
-
-    def dedup_minhash(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """MinHash-LSH near-duplicate dedup — banded bucket-join, never
-        all-pairs. See datapipe.dedup_minhash."""
-        from .datapipe import dedup_minhash as _dm
-
-        return _dm(self, text_col, id_col, **kw)
-
-    def minhash_pairs(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """Jaccard-verified MinHash-LSH near-duplicate pairs
-        (ida, idb, jac). See datapipe.minhash_pairs."""
-        from .datapipe import minhash_pairs as _mp
-
-        return _mp(self, text_col, id_col, **kw)
-
-    def dedup_cluster_minhash(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """Cluster-level fuzzy dedup: MinHash pairs → connected
-        components → canonical doc per cluster. See
-        datapipe.dedup_cluster_minhash."""
-        from .datapipe import dedup_cluster_minhash as _dc
-
-        return _dc(self, text_col, id_col, **kw)
-
-    def duplicate_span_fraction(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """Fraction of each doc's distinct n-grams shared with other
-        docs (span-level duplication signal). See
-        datapipe.duplicate_span_fraction."""
-        from .datapipe import duplicate_span_fraction as _df_
-
-        return _df_(self, text_col, id_col, **kw)
-
-    def longest_duplicate_span(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """EXACT longest duplicated word-span per document (generalized
-        suffix automaton per hash group — the true substring-dedup
-        signal duplicate_span_fraction approximates). See
-        datapipe.longest_duplicate_span."""
-        from .datapipe import longest_duplicate_span as _ls
-
-        return _ls(self, text_col, id_col, **kw)
-
-    def chunk_dedup(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Chunk-level exact dedup with document reassembly. See
-        prep.chunk_dedup."""
-        from .prep import chunk_dedup as _cd
-
-        return _cd(self, id_col, text_col, **kw)
-
-    def chunk_dedup_cdc(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Chunk dedup with CONTENT-DEFINED boundaries (insertion-robust
-        — boundaries re-synchronize at anchor tokens). See
-        prep.chunk_dedup_cdc."""
-        from .prep import chunk_dedup_cdc as _cdc
-
-        return _cdc(self, id_col, text_col, **kw)
-
-    def drop_common_chunks(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Corpus-frequency boilerplate removal: drop EVERY occurrence
-        of chunks shared by >= max_df distinct documents, reassemble.
-        See prep.drop_common_chunks."""
-        from .prep import drop_common_chunks as _dc
-
-        return _dc(self, id_col, text_col, **kw)
-
-    def cap_per_group(self, id_col: str, group_col: str, cap: int,
-                      **kw) -> "Stream":
-        """Deterministic per-group (per-domain) document cap by salted
-        hash rank. See prep.cap_per_group."""
-        from .prep import cap_per_group as _cp
-
-        return _cp(self, id_col, group_col, cap, **kw)
-
-    def shard_by_tokens(self, id_col: str, ntok_col: str,
-                        n_shards: int) -> "Stream":
-        """Token-balanced serpentine shard assignment (adds ``shard``).
-        See prep.shard_by_tokens."""
-        from .prep import shard_by_tokens as _sb
-
-        return _sb(self, id_col, ntok_col, n_shards)
-
-    def write_training_shards(self, path: str, id_col: str, ntok_col: str,
-                              n_shards: int, **kw) -> "Stream":
-        """Write token-balanced training shards partitioned by ``shard``;
-        returns the per-shard manifest. See prep.write_training_shards."""
-        from .prep import write_training_shards as _wt
-
-        return _wt(self, path, id_col, ntok_col, n_shards, **kw)
-
-    def dedup_url(self, id_col: str, url_col: str) -> "Stream":
-        """Exact dedup on the canonical URL (min-id survivor + collapse
-        count). See prep.dedup_url / prep.canonical_url."""
-        from .prep import dedup_url as _du
-
-        return _du(self, id_col, url_col)
-
-    def split_sentences(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Sentence segmentation: one row per (trimmed, length-gated)
-        sentence with a 0-based index. See prep.split_sentences."""
-        from .prep import split_sentences as _ss
-
-        return _ss(self, id_col, text_col, **kw)
-
-    def temperature_mix(self, id_col: str, group_col: str, **kw) -> "Stream":
-        """Temperature-based mix rebalancing (shares ∝ n^(1/T), derived
-        from the data). See prep.temperature_mix."""
-        from .prep import temperature_mix as _tm
-
-        return _tm(self, id_col, group_col, **kw)
-
-    def split_long_docs(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Sliding-window splitting of long docs into overlapping
-        full-length training windows. See prep.split_long_docs."""
-        from .prep import split_long_docs as _sl
-
-        return _sl(self, id_col, text_col, **kw)
-
-    def sentence_dedup(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Sentence-level exact dedup with in-order document reassembly
-        (first occurrence wins). See prep.sentence_dedup."""
-        from .prep import sentence_dedup as _sd
-
-        return _sd(self, id_col, text_col, **kw)
-
-    def take_token_budget(self, ntok_col: str, budget: int, *, order) -> "Stream":
-        """Greedy token-budget fill in priority order (skew-proof global
-        prefix sum). See prep.take_token_budget."""
-        from .prep import take_token_budget as _tb
-
-        return _tb(self, ntok_col, budget, order=order)
-
-    def epoch_shuffle(self, id_col: str, **kw) -> "Stream":
-        """Deterministic seeded global shuffle order (+ optional
-        round-robin shard assignment) for reproducible training epochs.
-        See prep.epoch_shuffle."""
-        from .prep import epoch_shuffle as _es
-
-        return _es(self, id_col, **kw)
-
-    def filter_by_score_quantile(self, score_col: str, lo: float, hi: float,
-                                 **kw) -> "Stream":
-        """Quantile-band selection (keep the middle of the score
-        distribution). See prep.filter_by_score_quantile."""
-        from .prep import filter_by_score_quantile as _fq
-
-        return _fq(self, score_col, lo, hi, **kw)
-
-    def filter_urls(self, url_col: str, **kw) -> "Stream":
-        """URL blocklist filter (hosts / registrable domains / regex
-        patterns, map-side). See prep.filter_urls."""
-        from .prep import filter_urls as _fu
-
-        return _fu(self, url_col, **kw)
-
-    def filter_urls_against(self, blocklist, url_col: str, **kw) -> "Stream":
-        """URL blocklist filter against a blocklist relation via
-        broadcast anti-join. See prep.filter_urls_against."""
-        from .prep import filter_urls_against as _fua
-
-        return _fua(self, blocklist, url_col, **kw)
-
-    def dedup_simhash(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """SimHash near-dup dedup — byte-band buckets + Hamming verify.
-        See datapipe.dedup_simhash."""
-        from .datapipe import dedup_simhash as _ds
-
-        return _ds(self, text_col, id_col, **kw)
-
-    def dedup_phash(self, features_col: str, id_col: str, **kw) -> "Stream":
-        """Perceptual-hash near-dup dedup for decoded media features
-        (aHash/pHash thresholding → banded Hamming buckets). See
-        datapipe.dedup_phash."""
-        from .datapipe import dedup_phash as _dp
-
-        return _dp(self, features_col, id_col, **kw)
-
-    def dedup_phash_against(self, reference: "Stream", features_col: str,
-                            **kw) -> "Stream":
-        """Media decontamination: drop items whose perceptual hash is
-        within Hamming distance of any REFERENCE item's hash (broadcast
-        signature array, zero corpus shuffles). See
-        datapipe.dedup_phash_against."""
-        from .datapipe import dedup_phash_against as _dpa
-
-        return _dpa(self, reference, features_col, **kw)
-
-    def similar_pairs_ngram(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """n-gram Jaccard similarity join via inverted index with a
-        document-frequency cutoff. See datapipe.similar_pairs_ngram."""
-        from .datapipe import similar_pairs_ngram as _sp
-
-        return _sp(self, text_col, id_col, **kw)
-
-    def dedup_cluster_exact(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """Cluster-level EXACT fuzzy dedup (lossless pairs → connected
-        components → canonical per cluster). See
-        datapipe.dedup_cluster_exact."""
-        from .datapipe import dedup_cluster_exact as _dce
-
-        return _dce(self, text_col, id_col, **kw)
-
-    def similar_pairs_exact(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """EXACT threshold Jaccard similarity join via lossless prefix
-        filtering (AllPairs/PPJoin family) — no df cutoff, no LSH
-        false negatives. See datapipe.similar_pairs_exact."""
-        from .datapipe import similar_pairs_exact as _spe
-
-        return _spe(self, text_col, id_col, **kw)
-
-    def containment_pairs_exact(self, text_col: str, id_col: str,
-                                **kw) -> "Stream":
-        """EXACT directed containment join (|A∩B|/|A| ≥ t): the
-        sub-document duplication detector Jaccard misses when sizes are
-        asymmetric. See datapipe.containment_pairs_exact."""
-        from .datapipe import containment_pairs_exact as _cpe
-
-        return _cpe(self, text_col, id_col, **kw)
-
-    def diversity_sample(self, **kw) -> "Stream":
-        """Cluster-balanced sampling: per-IVF-cell deterministic quota
-        over an embedding column. See datapipe.diversity_sample."""
-        from .datapipe import diversity_sample as _dvs
-
-        return _dvs(self, **kw)
-
-    def dedup_embedding(self, **kw) -> "Stream":
-        """Embedding-cosine near-dup dedup via sign-LSH buckets.
-        See datapipe.dedup_embedding."""
-        from .datapipe import dedup_embedding as _de
-
-        return _de(self, **kw)
-
-    def dedup_embedding_ivf(self, **kw) -> "Stream":
-        """Semantic dedup via IVF Voronoi cells (SemDeDup shape) —
-        geometry-following candidate cells instead of hyperplane signs.
-        See datapipe.dedup_embedding_ivf."""
-        from .datapipe import dedup_embedding_ivf as _dei
-
-        return _dei(self, **kw)
-
-    def mine_contrastive_pairs(self, **kw) -> "Stream":
-        """Contrastive training pairs from the corpus geometry:
-        positives = would-be SemDeDup drops, hard negatives = closest
-        same-cell non-duplicates. See datapipe.mine_contrastive_pairs."""
-        from .datapipe import mine_contrastive_pairs as _mcp
-
-        return _mcp(self, **kw)
-
-    def text_stats(self, text_col: str) -> "Stream":
-        """Token/char counts, ratios, fingerprint, quality score — pure
-        expressions. See datapipe.text_stats."""
-        from .datapipe import text_stats as _ts
-
-        return _ts(self, text_col)
-
-    def lang_id(self, text_col: str, alias: str = "pred_lang") -> "Stream":
-        """Heuristic stopword-scoring language id. See datapipe.lang_id."""
-        from .datapipe import lang_id as _li
-
-        return _li(self, text_col, alias)
-
-    def token_count(self, text_col: str) -> "Stream":
-        """Whitespace + BPE-ish-regex token counts per row — pure
-        expressions. See datapipe.token_count."""
-        from .datapipe import token_count as _tc
-
-        return _tc(self, text_col)
-
-    def approx_distinct_kmv(self, col, *, k: int = 256,
-                            alias: str = "approx_distinct") -> "Stream":
-        """KMV distinct-count sketch — datapipe.approx_distinct_kmv."""
-        from .datapipe import approx_distinct_kmv as _kmv
-
-        return _kmv(self, col, k=k, alias=alias)
-
-    def heavy_hitters(self, key_col, k: int, *, capacity: Optional[int] = None,
-                      cnt_alias: str = "cnt") -> "Stream":
-        """Exact top-k most frequent keys via a two-pass Misra-Gries
-        sketch (bounded per-partition counters + exact recount of the
-        candidate set). See datapipe.heavy_hitters."""
-        from .datapipe import heavy_hitters as _hh
-
-        return _hh(self, key_col, k, capacity=capacity, cnt_alias=cnt_alias)
-
-    def fingerprint_winnow(self, text_col: str, id_col: str, **kw) -> "Stream":
-        """Winnowing rolling-hash fingerprints, exploded (id, fp) pairs.
-        See datapipe.fingerprint_winnow."""
-        from .datapipe import fingerprint_winnow as _fw
-
-        return _fw(self, text_col, id_col, **kw)
-
-    # ------------------------------------------------------------------ #
     # training-data preparation operators (prep.py)
-    # ------------------------------------------------------------------ #
-
-    def pii_redact(self, text_col: str, **kw) -> "Stream":
-        """Regex PII redaction with per-kind match counts — prep.pii_redact."""
-        from .prep import pii_redact as _pr
-
-        return _pr(self, text_col, **kw)
-
-    def quality_gopher(self, text_col: str, **kw) -> "Stream":
-        """Gopher-rule quality metrics + keep flag — prep.quality_gopher."""
-        from .prep import quality_gopher as _qg
-
-        return _qg(self, text_col, **kw)
-
-    def repetition_stats(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Duplicate-word / top-n-gram repetition metrics —
-        prep.repetition_stats."""
-        from .prep import repetition_stats as _rs
-
-        return _rs(self, id_col, text_col, **kw)
-
-    def sample_fraction(self, id_col: str, fraction: float, **kw) -> "Stream":
-        """Deterministic map-side fractional sample — prep.sample_fraction."""
-        from .prep import sample_fraction as _sf
-
-        return _sf(self, id_col, fraction, **kw)
-
-    def fim_transform(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Fill-in-the-middle PSM reordering for a deterministic
-        fraction of documents (code-infill training data) —
-        prep.fim_transform."""
-        from .prep import fim_transform as _fim
-
-        return _fim(self, id_col, text_col, **kw)
-
-    def word_entropy(self, id_col: str, text_col: str) -> "Stream":
-        """Per-document token-distribution entropy (quality signal) —
-        prep.word_entropy."""
-        from .prep import word_entropy as _we
-
-        return _we(self, id_col, text_col)
-
-    def unigram_logprob(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Per-document mean token log-probability under a corpus-trained
-        unigram LM (perplexity-style quality filter) —
-        prep.unigram_logprob."""
-        from .prep import unigram_logprob as _ul
-
-        return _ul(self, id_col, text_col, **kw)
-
-    def corpus_report(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """One-call dataset card: (metric, value) rows — size, exact-dup
-        rate, Gopher pass rate, PII rate, language mix —
-        prep.corpus_report (``exact_median=False`` for the GK-sketch
-        median at unbounded length domains)."""
-        from .prep import corpus_report as _cr
-
-        return _cr(self, id_col, text_col, **kw)
-
-    def bigram_logprob(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Per-document mean log-probability under a corpus-trained
-        INTERPOLATED bigram LM (the KenLM-shaped filter; catches locally
-        incoherent word order the unigram model is blind to) —
-        prep.bigram_logprob."""
-        from .prep import bigram_logprob as _bl
-
-        return _bl(self, id_col, text_col, **kw)
-
-    def bpe_train(self, text_col: str, **kw) -> "Stream":
-        """Learn a BPE merge table from the corpus (deterministic
-        Sennrich-style word-level BPE over the word-frequency relation)
-        — prep.bpe_train."""
-        from .prep import bpe_train as _bt
-
-        return _bt(self, text_col, **kw)
-
-    def bpe_segment(self, text_col: str, merge_rows, **kw) -> "Stream":
-        """Apply a learned BPE merge table to every document (memoized
-        Arrow-batched encoding) — prep.bpe_segment."""
-        from .prep import bpe_segment as _bs
-
-        return _bs(self, text_col, merge_rows, **kw)
-
-    def sample_weighted(self, id_col: str, weight_expr, **kw) -> "Stream":
-        """Deterministic per-row weighted sample (keep-probability =
-        weight column, e.g. a quality score) — prep.sample_weighted."""
-        from .prep import sample_weighted as _sw
-
-        return _sw(self, id_col, weight_expr, **kw)
-
-    def sample_weighted_k(self, id_col: str, weight_expr, k: int,
-                          **kw) -> "Stream":
-        """Exact-k weighted sample without replacement (A-Res) —
-        prep.sample_weighted_k."""
-        from .prep import sample_weighted_k as _swk
-
-        return _swk(self, id_col, weight_expr, k, **kw)
-
-    def sample_stratified(self, id_col: str, strata, quota: int,
-                          **kw) -> "Stream":
-        """Deterministic per-stratum quota sample — prep.sample_stratified."""
-        from .prep import sample_stratified as _ss
-
-        return _ss(self, id_col, strata, quota, **kw)
-
-    def assign_split(self, id_col: str, weights, **kw) -> "Stream":
-        """Deterministic train/val/test labels by hash range —
-        prep.assign_split."""
-        from .prep import assign_split as _as
-
-        return _as(self, id_col, weights, **kw)
-
-    def split_by_hash(self, id_col: str, weights, **kw):
-        """Dict of disjoint split streams — prep.split_by_hash."""
-        from .prep import split_by_hash as _sh
-
-        return _sh(self, id_col, weights, **kw)
-
-    def assign_split_by_group(self, group_col: str, weights,
-                              **kw) -> "Stream":
-        """Leakage-safe split labels hashed on a GROUP key (cluster id /
-        domain), so near-duplicates co-split —
-        prep.assign_split_by_group."""
-        from .prep import assign_split_by_group as _ag
-
-        return _ag(self, group_col, weights, **kw)
-
-    def split_leakage(self, group_col: str, **kw) -> "Stream":
-        """Audit: groups straddling >1 split (empty == leakage-free) —
-        prep.split_leakage."""
-        from .prep import split_leakage as _sl
-
-        return _sl(self, group_col, **kw)
-
-    def corpus_diff(self, old: "Stream", id_col: str, content_cols,
-                    **kw) -> "Stream":
-        """Snapshot diff vs an older corpus version (added / removed /
-        changed by content hash) — datapipe.corpus_diff."""
-        from .datapipe import corpus_diff as _cd
-
-        return _cd(self, old, id_col, content_cols, **kw)
-
-    def incremental_rebuild(self, old: "Stream", prev_output: "Stream",
-                            id_col: str, content_cols,
-                            transform) -> "Stream":
-        """Reprocess only the snapshot delta (diff → transform added/
-        changed → union with surviving previous output) —
-        datapipe.incremental_rebuild."""
-        from .datapipe import incremental_rebuild as _ir
-
-        return _ir(self, old, prev_output, id_col, content_cols, transform)
-
-    def corpus_overlap(self, other: "Stream", text_col: str,
-                       **kw) -> "Stream":
-        """Exact corpus-level shingle overlap statistics (1 row) —
-        datapipe.corpus_overlap."""
-        from .datapipe import corpus_overlap as _co
-
-        return _co(self, other, text_col, **kw)
-
-    def corpus_overlap_kmv(self, other: "Stream", text_col: str,
-                           **kw) -> "Stream":
-        """KMV-sketch overlap estimate (one pass per corpus, no key
-        join) — datapipe.corpus_overlap_kmv."""
-        from .datapipe import corpus_overlap_kmv as _ck
-
-        return _ck(self, other, text_col, **kw)
-
-    def hybrid_search(self, embs: "Stream", query_terms, query_vec_id,
-                      **kw) -> "Stream":
-        """BM25 + cosine reciprocal-rank-fusion retrieval —
-        datapipe.hybrid_search."""
-        from .datapipe import hybrid_search as _hs
-
-        return _hs(self, embs, query_terms, query_vec_id, **kw)
-
-    def rebalance_mix(self, id_col: str, group_col: str, targets,
-                      **kw) -> "Stream":
-        """Domain-mix rebalancing to target shares — prep.rebalance_mix."""
-        from .prep import rebalance_mix as _rm
-
-        return _rm(self, id_col, group_col, targets, **kw)
-
-    def upsample_epochs(self, id_col: str, group_col: str, epochs,
-                        **kw) -> "Stream":
-        """Fractional-epoch corpus mixing (deterministic per-group
-        replication, map-side explode) — prep.upsample_epochs."""
-        from .prep import upsample_epochs as _ue
-
-        return _ue(self, id_col, group_col, epochs, **kw)
-
-    def dsir_weights(self, target, text_col: str, id_col: str,
-                     **kw) -> "Stream":
-        """Per-doc DSIR log importance weight (hashed n-gram target vs
-        raw distributions; Xie et al. 2023) — prep.dsir_weights."""
-        from .prep import dsir_weights as _dw
-
-        return _dw(self, target, text_col, id_col, **kw)
-
-    def dsir_select(self, target, text_col: str, id_col: str, k: int,
-                    **kw) -> "Stream":
-        """Importance-resample k docs toward a target domain (Gumbel
-        top-k in log space, deterministic) — prep.dsir_select."""
-        from .prep import dsir_select as _ds
-
-        return _ds(self, target, text_col, id_col, k, **kw)
-
-    def nb_classify(self, labeled, text_col: str, id_col: str,
-                    label_col: str, **kw) -> "Stream":
-        """Train a multinomial Naive Bayes on ``labeled`` and score
-        this stream (argmax class + score) — prep.nb_classify."""
-        from .prep import nb_classify as _nb
-
-        return _nb(self, labeled, text_col, id_col, label_col, **kw)
-
-    def pack_sequences(self, id_col: str, ntok_col: str, **kw) -> "Stream":
-        """Concat-and-chunk sequence packing — prep.pack_sequences."""
-        from .prep import pack_sequences as _ps
-
-        return _ps(self, id_col, ntok_col, **kw)
-
-    def tfidf_top_terms(self, id_col: str, text_col: str, **kw) -> "Stream":
-        """Top-k TF-IDF terms per document — prep.tfidf_top_terms."""
-        from .prep import tfidf_top_terms as _tt
-
-        return _tt(self, id_col, text_col, **kw)
-
-    def bm25_rank(self, id_col: str, text_col: str, query, **kw) -> "Stream":
-        """BM25 top-k retrieval for a query term bag — prep.bm25_rank."""
-        from .prep import bm25_rank as _bm
-
-        return _bm(self, id_col, text_col, query, **kw)
-
-    def contaminated_ngrams(self, reference: "Stream", id_col: str,
-                            text_col: str, ref_text_col: str,
-                            **kw) -> "Stream":
-        """N-gram benchmark decontamination flags —
-        prep.contaminated_ngrams."""
-        from .prep import contaminated_ngrams as _cn
-
-        return _cn(self, reference, id_col, text_col, ref_text_col, **kw)
-
-    def decode_image(self, content_col: str = "content",
-                     out_col: str = "image", **kw) -> "Stream":
-        """Image decode plumbing (stubbed codec) — multimodal.decode_image
-        (``n_features=`` sizes the feature grid for dedup_phash)."""
-        from .multimodal import decode_image as _di
-
-        return _di(self, content_col, out_col, **kw)
-
-    def dedup_video_phash(self, id_col: str,
-                          content_col: str = "content", **kw) -> "Stream":
-        """Video near-dup dedup: per-frame perceptual hashes with an
-        aligned-frame majority vote — multimodal.dedup_video_phash."""
-        from .multimodal import dedup_video_phash as _dv
-
-        return _dv(self, id_col, content_col, **kw)
-
-    def pack_binary(self, path_col: str = "path",
-                    content_col: str = "content") -> "Stream":
-        """Small-file packing: (path, content, length) projection so
-        millions of tiny media files write to parquet once and scan
-        with normal splits — multimodal.pack_binary."""
-        from .multimodal import pack_binary as _pb
-
-        return _pb(self, path_col, content_col)
-
-    def decode_audio(self, content_col: str = "content", out_col: str = "audio") -> "Stream":
-        """Audio decode plumbing (stubbed codec) — multimodal.decode_audio."""
-        from .multimodal import decode_audio as _da
-
-        return _da(self, content_col, out_col)
-
-    def decode_media(self, content_col: str = "content", *, image: bool = True,
-                     audio: bool = True) -> "Stream":
-        """Fused image+audio decode (one Arrow pass) — multimodal.decode_media."""
-        from .multimodal import decode_media as _dm
-
-        return _dm(self, content_col, image=image, audio=audio)
-
-    def resize_image(self, *, width: int, height: int, prefix: str = "image") -> "Stream":
-        """Resize metadata rewrite — multimodal.resize_image."""
-        from .multimodal import resize_image as _ri
-
-        return _ri(self, width=width, height=height, prefix=prefix)
-
-    def sample_frames(self, content_col: str = "content", *, num_frames: int = 4,
-                      out_col: str = "frame", **kw) -> "Stream":
-        """Video frame sampling plumbing — multimodal.sample_frames
-        (``columns=`` projects the input columns riding back out of the
-        Arrow stage, the decode_image contract)."""
-        from .multimodal import sample_frames as _sf
-
-        return _sf(self, content_col, num_frames=num_frames, out_col=out_col, **kw)
-
-    def embed_text(self, text_col: str = "caption",
-                   out_col: str = "text_embedding", **kw) -> "Stream":
-        """Caption → joint-space embedding via the text_embed registry
-        codec (CLIP text tower seam) — multimodal.embed_text."""
-        from .multimodal import embed_text as _et
-
-        return _et(self, text_col, out_col, **kw)
-
-    def align_score(self, text_vec_col: str = "text_embedding",
-                    media_vec_col: str = "image_features",
-                    out_col: str = "align_cos") -> "Stream":
-        """CLIP-score column: JVM cosine between caption embedding and
-        media features — multimodal.align_score."""
-        from .multimodal import align_score as _as
-
-        return _as(self, text_vec_col, media_vec_col, out_col)
-
-    def align_filter(self, **kw) -> "Stream":
-        """Image-text alignment gate (threshold and/or quantile band
-        on the CLIP-shape cosine) — multimodal.align_filter."""
-        from .multimodal import align_filter as _af
-
-        return _af(self, **kw)
+    chunk_dedup = prep.chunk_dedup
+    chunk_dedup_cdc = prep.chunk_dedup_cdc
+    drop_common_chunks = prep.drop_common_chunks
+    cap_per_group = prep.cap_per_group
+    shard_by_tokens = prep.shard_by_tokens
+    write_training_shards = prep.write_training_shards
+    dedup_url = prep.dedup_url
+    split_sentences = prep.split_sentences
+    temperature_mix = prep.temperature_mix
+    split_long_docs = prep.split_long_docs
+    sentence_dedup = prep.sentence_dedup
+    take_token_budget = prep.take_token_budget
+    epoch_shuffle = prep.epoch_shuffle
+    filter_by_score_quantile = prep.filter_by_score_quantile
+    filter_urls = prep.filter_urls
+    filter_urls_against = prep.filter_urls_against
+    pii_redact = prep.pii_redact
+    quality_gopher = prep.quality_gopher
+    repetition_stats = prep.repetition_stats
+    sample_fraction = prep.sample_fraction
+    fim_transform = prep.fim_transform
+    word_entropy = prep.word_entropy
+    unigram_logprob = prep.unigram_logprob
+    corpus_report = prep.corpus_report
+    bigram_logprob = prep.bigram_logprob
+    bpe_train = prep.bpe_train
+    bpe_segment = prep.bpe_segment
+    sample_weighted = prep.sample_weighted
+    sample_weighted_k = prep.sample_weighted_k
+    sample_stratified = prep.sample_stratified
+    assign_split = prep.assign_split
+    split_by_hash = prep.split_by_hash
+    assign_split_by_group = prep.assign_split_by_group
+    split_leakage = prep.split_leakage
+    rebalance_mix = prep.rebalance_mix
+    upsample_epochs = prep.upsample_epochs
+    dsir_weights = prep.dsir_weights
+    dsir_select = prep.dsir_select
+    nb_classify = prep.nb_classify
+    pack_sequences = prep.pack_sequences
+    tfidf_top_terms = prep.tfidf_top_terms
+    bm25_rank = prep.bm25_rank
+    contaminated_ngrams = prep.contaminated_ngrams
+
+    # image / audio / video operators (multimodal.py)
+    decode_image = multimodal.decode_image
+    dedup_video_phash = multimodal.dedup_video_phash
+    pack_binary = multimodal.pack_binary
+    decode_audio = multimodal.decode_audio
+    decode_media = multimodal.decode_media
+    resize_image = multimodal.resize_image
+    sample_frames = multimodal.sample_frames
+    embed_text = multimodal.embed_text
+    align_score = multimodal.align_score
+    align_filter = multimodal.align_filter
+
+    # persisted ANN index (ann_index.py)
+    ann_index_build = ann_index.ann_index_build
+
+    # persisted MinHash and perceptual-hash dedup indexes (dedup_index.py)
+    dedup_index_build = dedup_index.dedup_index_build
+    phash_index_build = dedup_index.phash_index_build
 
     def ann_cosine(self, queries: "Stream", *, method: str = "brute", **kw) -> "Stream":
         """Cosine top-k similarity search over an embedding column:
@@ -1703,57 +1137,16 @@ class Stream:
         (byte-quantized scan + exact rerank) or ``'ivf_sq8'`` (the
         composed two-level stack: cells bound search volume, codes bound
         scan bytes). See datapipe.ann_cosine_*."""
-        from .datapipe import (
-            ann_cosine_brute,
-            ann_cosine_ivf,
-            ann_cosine_ivf_sq8,
-            ann_cosine_lsh,
-            ann_cosine_sq8,
-        )
-
-        if method == "brute":
-            return ann_cosine_brute(self, queries, **kw)
-        if method == "lsh":
-            return ann_cosine_lsh(self, queries, **kw)
-        if method == "ivf":
-            return ann_cosine_ivf(self, queries, **kw)
-        if method == "sq8":
-            return ann_cosine_sq8(self, queries, **kw)
-        if method == "ivf_sq8":
-            return ann_cosine_ivf_sq8(self, queries, **kw)
-        raise ValueError(f"unknown ann method {method!r}")
-
-    def ann_index_build(self, path: str, **kw):
-        """Persist the IVF+SQ8 index for this corpus at ``path`` (one
-        encode+assign pass, hive-partitioned by cell) and return an
-        ``AnnIndex`` handle whose ``query()`` serves batches with
-        partition pruning — identical results to
-        ``ann_cosine(method='ivf_sq8')``. See ann_index module."""
-        from .ann_index import ann_index_build as _aib
-
-        return _aib(self, path, **kw)
-
-    def dedup_index_build(self, path: str, **kw):
-        """Persist the MinHash-LSH dedup index for this corpus at
-        ``path`` (one signature pass, hive-partitioned postings +
-        shingles) and return a ``DedupIndex`` whose ``dedup_batch`` /
-        ``append`` make near-duplicate dedup INCREMENTAL — new data
-        dedups against the accumulated corpus without recomputing its
-        signatures. See dedup_index module."""
-        from .dedup_index import dedup_index_build as _dib
-
-        return _dib(self, path, **kw)
-
-    def phash_index_build(self, path: str, **kw):
-        """Persist the perceptual-hash media dedup index for this
-        DECODED corpus at ``path`` (one signature pass, one
-        hive-partitioned posting relation — the 8-byte signature IS the
-        verifier) and return a ``PhashIndex`` whose ``dedup_batch`` /
-        ``append`` make media dedup INCREMENTAL. See dedup_index
-        module."""
-        from .dedup_index import phash_index_build as _pib
-
-        return _pib(self, path, **kw)
+        fn = {
+            "brute": datapipe.ann_cosine_brute,
+            "lsh": datapipe.ann_cosine_lsh,
+            "ivf": datapipe.ann_cosine_ivf,
+            "sq8": datapipe.ann_cosine_sq8,
+            "ivf_sq8": datapipe.ann_cosine_ivf_sq8,
+        }.get(method)
+        if fn is None:
+            raise ValueError(f"unknown ann method {method!r}")
+        return fn(self, queries, **kw)
 
     # ------------------------------------------------------------------ #
     # event time (SURVEY.md §2.8) and streaming handoff
@@ -1859,8 +1252,13 @@ class Stream:
             base, name = os.path.split(template_path)
             prefix, ext = os.path.splitext(name)
             ext = ext or ".csv"
-        os.makedirs(base, exist_ok=True)
-        staging = os.path.join(base, f".spark-staging-{uuid.uuid4().hex[:8]}")
+        if base:
+            os.makedirs(base, exist_ok=True)
+        # absolute: the JVM resolves a relative path against its own
+        # working directory, which need not be Python's
+        staging = os.path.join(
+            os.path.abspath(base), f".spark-staging-{uuid.uuid4().hex[:8]}"
+        )
         self.df.write.mode("overwrite").options(
             header="true", **options
         ).csv(staging)
@@ -2082,11 +1480,16 @@ class RouteBuilder:
         return self
 
     def build(self, *, persist: bool = True) -> list[Stream]:
+        """One branch per route. Like ``split``, every branch shares the
+        persisted base: ``unpersist()`` on any branch releases it."""
         base = self._stream.df.persist() if persist else self._stream.df
         out: list[Stream] = []
         for i, p in enumerate(self._preds):
             cond = p
+            # a NULL earlier predicate is "no match", so negate it
+            # null-safely: ~NULL is NULL and would drop the row
             for earlier in self._preds[:i]:
-                cond = cond & ~earlier
-            out.append(Stream(self._stream.ctx, base.filter(cond)))
+                cond = cond & ~F.coalesce(earlier, F.lit(False))
+            branch = self._stream._new(base.filter(cond))
+            out.append(branch._retain(base) if persist else branch)
         return out

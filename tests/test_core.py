@@ -176,6 +176,31 @@ def test_route_first_match(ctx):
     ]
 
 
+def test_route_null_earlier_predicate_falls_through(ctx):
+    """A row whose earlier predicate is NULL did not match it, so the
+    first later route it matches receives it (renoir's first match)."""
+    s = ctx.stream_iter([(1, None), (2, 5), (3, 20)], "id long, v long")
+    big, rest = (
+        s.route().add_route(F.col("v") > 10).add_route(F.col("id") >= 1).build()
+    )
+    assert sorted(r.id for r in big.collect_vec()) == [3]
+    assert sorted(r.id for r in rest.collect_vec()) == [1, 2]
+
+
+def test_route_unpersist_releases_persisted_base(ctx, spark):
+    """Like split's branches, route branches share the persisted base:
+    unpersist() on every branch leaves the CacheManager empty."""
+    spark.catalog.clearCache()
+    branches = (
+        _ints(ctx, 20).route().add_route(F.col("id") < 10)
+        .add_route(F.lit(True)).build()
+    )
+    assert sum(b.collect_count() for b in branches) == 20
+    for b in branches:
+        b.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_sorted_limit_offset(ctx):
     got = _ints(ctx).sorted_limit_by(F.col("id").desc(), 5, offset=2).collect_vec()
     assert [r.id for r in got] == [N - 3, N - 4, N - 5, N - 6, N - 7]

@@ -135,10 +135,11 @@ def test_stream_kafka_source_gated(ctx):
         assert s.df.isStreaming
 
 
-def test_write_csv_seq_numbered_replica_files(ctx, tmp_path):
+def test_write_csv_seq_numbered_replica_files(ctx, tmp_path, monkeypatch):
     """renoir write_csv_seq naming contract (csv.rs:116-133): template
     file -> prefix + 0000-numbered files keeping the extension;
-    template directory -> bare numbered files; contents round-trip."""
+    template directory -> bare numbered files; a bare file name writes
+    into the working directory; contents round-trip."""
     import os
 
     s = ctx.stream_range(100, partitions=3).map(id="id", sq=F.col("id") * 2)
@@ -157,6 +158,12 @@ def test_write_csv_seq_numbered_replica_files(ctx, tmp_path):
     assert [os.path.basename(p) for p in outs2] == [
         "0000.csv", "0001.csv", "0002.csv",
     ]
+
+    monkeypatch.chdir(tmp_path)
+    outs3 = s.write_csv_seq("bare.csv")
+    assert outs3 == ["bare0000.csv", "bare0001.csv", "bare0002.csv"]
+    assert all((tmp_path / p).is_file() for p in outs3)
+    assert not list(tmp_path.glob(".spark-staging-*"))
 
 
 def test_batch_mode_timed_sets_streaming_trigger(ctx):
